@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..session import barrier
+from ..session import barrier, local_frame
 
 from .dedup import doc_shingles
 
@@ -298,7 +298,8 @@ def epoch_shuffle(
             offsets.append((pid, sh, acc))
             acc += n
     spark = df.sparkSession
-    off_df = spark.createDataFrame(
+    off_df = local_frame(
+        spark,
         offsets or [(0, 0, 0)], schema="__pid int, shard int, __off long"
     )
     w = Window.partitionBy("__pid", "shard").orderBy("shuffle_key")

@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..session import barrier
+from ..session import barrier, local_frame
 
 from ..functions.textfns import normalize_text, token_count, tokens
 
@@ -654,104 +654,57 @@ def extract_html_text(
 def bpe_train(
     df: DataFrame,
     text_col: str = "text",
-    n_merges: int = 6,
+    n_merges: int = 1000,
+    min_count: int = 2,
 ) -> "DataFrame":
     """Train byte-pair-encoding merges ON the corpus (Sennrich et al.
     2016 — the tokenizer-training step of an LLM data pipeline),
     returning the learned merge table (merge_round, merge_left,
     merge_right, pair_count).
 
-    Scale shape — the reason this belongs in the engine: classic BPE
-    trains on the WORD-FREQUENCY DICTIONARY, not the raw corpus. The
-    corpus is touched exactly once (tokenize → groupBy(word) — one
-    shuffle); every merge round then runs over the dictionary, whose
-    size is the corpus VOCABULARY (≪ corpus, and sub-linear in corpus
-    growth), with a map-side pair explode, one small aggregate, and a
-    TakeOrdered-1 argmax. At 100 TB the rounds cost the same as at
-    1 TB once the dictionary is built.
+    Scale shape: classic BPE trains on the WORD-FREQUENCY DICTIONARY,
+    not the raw corpus. The corpus is touched exactly once, in ONE
+    Spark job (tokenize → groupBy(word), one shuffle); the dictionary
+    is collected once and the merge rounds run on the driver with
+    incremental pair statistics and a lazy-deletion heap
+    (_bpe_merges_from_word_freqs), thousands of merges per second
+    with no per-round Spark job. The training cost past the scan is
+    vocabulary-bound, so it is decoupled from corpus size.
+
+    The collected dictionary is bounded by `min_count`: distinct
+    whitespace tokens on open-web text grow with the corpus (Heaps'
+    law + URL/hash noise — NOT safely "vocabulary-bounded"), so words
+    with freq < min_count are pruned distributedly BEFORE the collect,
+    exactly as production BPE trainers do (hapax legomena contribute
+    pair counts of at most min_count-1 and essentially never decide a
+    merge on real corpora). min_count=1 disables pruning — the
+    configuration the registered queries use, bit-identical to their
+    DuckDB replay.
 
     Determinism: the argmax tiebreak is (count DESC, left, right) over
-    exact integer counts — both engines agree bit-for-bit, so even the
-    driver-side per-round argmax (the standard iterative-training
-    pattern, same as pyspark.ml's k-means centers) is value-hash
-    checkable against an unrolled-CTE SQL replay.
+    exact integer counts, so every learned merge is value-hash
+    checkable against the unrolled-CTE SQL replay
+    (plans/text_queries._bpe_oracle; tests/test_bpe.py pins parity).
 
-    Symbol-sequence representation: each symbol is WRAPPED in its own
-    spaces — ' l ' + ' o ' + ' w ' = ' l  o  w ' (double space between
-    symbols, single at the ends). Applying merge (a, b) is then
-    `replace(s, ' a  b ', ' ab ')`: the pattern is delimiter-bounded on
-    BOTH sides, so it can't fire when a neighboring symbol merely
-    starts with b (after (o,w)→'ow', merging (l,o) must NOT touch
-    ' l  ow ' — the earlier single-space form did, deviating from
-    Sennrich BPE; ADVICE r4). Because every symbol owns both its
-    delimiters, replacing one occurrence never consumes the next
-    occurrence's leading space, so the left-to-right non-overlapping
-    scan merges a run ' a  b  a  b ' fully in ONE pass — semantics
-    identical in Spark, DuckDB and Python str.replace, and equal to
-    the classic symbol-list scan (tests/test_bpe.py proves parity).
+    Merge semantics are Sennrich's symbol-list scan: left-to-right,
+    non-overlapping, never across a symbol boundary. The wrapped-symbol
+    string form bpe_apply_token_counts and the DuckDB replay use
+    (each symbol in its own spaces, merge (a, b) = replace
+    ' a  b ' -> ' ab ') is identical to it.
     """
     from ..functions.partitioning import spread_if_narrow
 
-    spark = df.sparkSession
     tok = spread_if_narrow(df, multiplier=0.5).select(
         F.explode(tokens(F.col(text_col))).alias("w")
     )
-    chars = F.expr("transform(sequence(1, char_length(w)), i -> substring(w, i, 1))")
-    # the dictionary is vocabulary-sized (tiny next to the corpus);
-    # collapse it to a few partitions so each merge round schedules a
-    # handful of tasks, not shuffle.partitions of them (6 rounds x 32
-    # near-empty tasks measured ~2x the whole training time)
-    words = (
-        tok.groupBy("w")
-        .agg(F.count(F.lit(1)).alias("freq"))
-        .repartition(4)
-        .select(
-            F.concat(
-                F.lit(" "), F.array_join(chars, "  "), F.lit(" ")
-            ).alias("s"),
-            "freq",
-        )
-        .transform(barrier)
-    )
-    # the symbol array is projected ONCE (t) in its own Project under
-    # the Generate: inlining split(trim(s)) into the transform lambda
-    # would re-split the string for EVERY element_at call — Catalyst
-    # does not hoist loop-invariant subexpressions out of lambda
-    # bodies, so the per-word pair explode cost O(len·symbols) splits
-    # instead of one (round 12, guide §1.2 per-task work)
-    pair_expr = F.expr(
-        "CASE WHEN size(t) >= 2 THEN "
-        "transform(sequence(1, size(t) - 1), i -> struct("
-        "element_at(t, i) AS a, "
-        "element_at(t, i + 1) AS b)) "
-        "ELSE array() END"
-    )
-    merges: list[tuple] = []
-    cur = words
-    for r in range(1, n_merges + 1):
-        pairs = (
-            cur.select(F.split(F.trim(F.col("s")), "  ").alias("t"), "freq")
-            .select(F.explode(pair_expr).alias("p"), "freq")
-            .groupBy("p.a", "p.b")
-            .agg(F.sum("freq").alias("cnt"))
-        )
-        best = pairs.orderBy(
-            F.desc("cnt"), F.asc("a"), F.asc("b")
-        ).limit(1).collect()
-        if not best:
-            break
-        a, b, cnt = best[0].a, best[0].b, int(best[0].cnt)
-        merges.append((r, a, b, cnt))
-        cur = cur.select(
-            F.replace(
-                F.col("s"),
-                F.lit(f" {a}  {b} "),
-                F.lit(f" {a}{b} "),
-            ).alias("s"),
-            "freq",
-        ).transform(barrier)
-    return spark.createDataFrame(
-        merges, "merge_round int, merge_left string, merge_right string, pair_count long"
+    freqs = tok.groupBy("w").agg(F.count(F.lit(1)).alias("freq"))
+    if min_count > 1:
+        freqs = freqs.filter(F.col("freq") >= min_count)
+    word_freqs = [(r["w"], r["freq"]) for r in freqs.collect()]
+    return local_frame(
+        df.sparkSession,
+        _bpe_merges_from_word_freqs(word_freqs, n_merges),
+        "merge_round int, merge_left string, merge_right string, pair_count long",
     )
 
 
@@ -761,10 +714,10 @@ def _bpe_merges_from_word_freqs(
     """Pure-Python Sennrich BPE merge rounds over a word-frequency
     dictionary, with incremental pair statistics and a lazy-deletion
     heap — O(changes · log) per round instead of a full recount, the
-    standard learn-bpe structure. Argmax tiebreak is exactly
-    bpe_train's: (count DESC, left ASC, right ASC) on exact integers,
-    so the two paths are merge-for-merge identical on the same
-    dictionary (tests/test_bpe.py pins the parity)."""
+    standard learn-bpe structure. Argmax tiebreak is (count DESC,
+    left ASC, right ASC) on exact integers — the order the DuckDB
+    replay's ORDER BY uses, so the two are merge-for-merge identical
+    on the same dictionary (tests/test_bpe.py pins the parity)."""
     import heapq
     from collections import Counter, defaultdict
 
@@ -836,51 +789,6 @@ def _bpe_merges_from_word_freqs(
     return merges
 
 
-def bpe_train_local(
-    df: DataFrame,
-    text_col: str = "text",
-    n_merges: int = 1000,
-    min_count: int = 2,
-) -> "DataFrame":
-    """BPE training at REALISTIC vocabulary scale (VERDICT r4 #3): the
-    corpus scan stays distributed (tokenize → groupBy(word), one
-    shuffle — identical to bpe_train's), but the merge rounds run
-    driver-local over the collected word-frequency dictionary. The
-    merge rounds are what the in-engine form cannot afford at 32k–100k
-    vocab (per-round Spark job scheduling); driver-local rounds with
-    incremental pair stats run thousands of merges per second
-    (SCALE.md r5 carries the measured rate). Same merge-table schema
-    and merge semantics as bpe_train; the 6-round in-engine form stays
-    as the oracle-checkable twin.
-
-    The collected dictionary is bounded by `min_count` (VERDICT r9
-    item 2): distinct whitespace tokens on open-web text grow with the
-    corpus (Heaps' law + URL/hash noise — NOT safely "vocabulary-
-    bounded"), so words with freq < min_count are pruned distributedly
-    BEFORE the collect, exactly as production BPE trainers do
-    (hapax legomena contribute pair counts of at most min_count-1 and
-    essentially never decide a merge on real corpora). min_count=1
-    disables pruning — the bit-identical-to-oracle configuration the
-    registered query uses at test SFs; at open-web scale, leave the
-    default (the driver then holds the ≥min_count vocabulary, which
-    Heaps-law tails cannot inflate)."""
-    spark = df.sparkSession
-    from ..functions.partitioning import spread_if_narrow
-
-    tok = spread_if_narrow(df, multiplier=0.5).select(
-        F.explode(tokens(F.col(text_col))).alias("w")
-    )
-    freqs = tok.groupBy("w").agg(F.count(F.lit(1)).alias("freq"))
-    if min_count > 1:
-        freqs = freqs.filter(F.col("freq") >= min_count)
-    word_freqs = [(r["w"], r["freq"]) for r in freqs.collect()]
-    merges = _bpe_merges_from_word_freqs(word_freqs, n_merges)
-    return spark.createDataFrame(
-        merges,
-        "merge_round int, merge_left string, merge_right string, pair_count long",
-    )
-
-
 def bpe_apply_token_counts(
     df: DataFrame,
     merges: list[tuple[str, str]],
@@ -896,15 +804,17 @@ def bpe_apply_token_counts(
     (id, n_words, n_bpe_tokens).
 
     `merges`: ordered (left, right) pairs from bpe_train — applied in
-    training order, same space-delimited replace() semantics."""
+    training order."""
     from ..functions.partitioning import spread_if_narrow
 
     toks = spread_if_narrow(df, multiplier=0.5).select(
         F.col(id_col), F.explode(tokens(F.col(text_col))).alias("w")
     )
     chars = F.expr("transform(sequence(1, char_length(w)), i -> substring(w, i, 1))")
-    # wrapped-symbol representation, as in bpe_train: boundary-safe on
-    # both sides of the replace
+    # wrapped-symbol representation: each symbol owns both its
+    # delimiters, so ' a  b ' -> ' ab ' never fires on a neighbour that
+    # merely starts with b, and a run ' a  b  a  b ' merges fully in
+    # one pass — bpe_train's left-to-right symbol-list scan
     s = F.concat(F.lit(" "), F.array_join(chars, "  "), F.lit(" "))
     for a, b in merges:
         s = F.replace(s, F.lit(f" {a}  {b} "), F.lit(f" {a}{b} "))

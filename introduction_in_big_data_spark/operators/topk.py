@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..session import barrier
+from ..session import barrier, local_frame
 
 
 def top_k(df: DataFrame, order_by: list, k: int) -> DataFrame:
@@ -91,7 +91,7 @@ def exact_ntile(
         offsets.append((pid, acc))
         acc += sizes[pid]
     spark = df.sparkSession
-    off_df = spark.createDataFrame(offsets or [(0, 0)], schema="__pid int, __off long")
+    off_df = local_frame(spark, offsets or [(0, 0)], schema="__pid int, __off long")
     q, r = divmod(n, n_buckets)
     big = r * (q + 1)  # ranks 1..big fall in the first r (larger) buckets
     w = Window.partitionBy("__pid").orderBy(*cols)

@@ -7,7 +7,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..session import barrier
+from ..session import barrier, local_frame
 
 from . import cdf_fixture as _cdf
 from .registry import register, t
@@ -1380,7 +1380,8 @@ def delta_row_tracking_dml_read(spark, sf_dir):
     commit_append(
         spark,
         path,
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(90000001 + i, "9-REINS") for i in range(5)],
             "o_orderkey long, o_orderpriority string",
         ).coalesce(1).sortWithinPartitions("o_orderkey"),
@@ -1469,7 +1470,8 @@ def delta_type_widening_read(spark, sf_dir):
         for a in acts:
             fh.write(_json.dumps(a) + "\n")
     DeltaLogReader(spark, path).merge(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(8000000000, "9-WIDE")], "o_orderkey long, o_orderpriority string"
         ),
         "o_orderkey",
@@ -3216,7 +3218,8 @@ def iceberg_nested_name_mapping_read(spark, sf_dir):
         for f in _os.listdir(raw_dir)
         if f.endswith(".parquet")
     )
-    shape = spark.createDataFrame(
+    shape = local_frame(
+        spark,
         [],
         "customer_id long, info struct<seg:string, bal:double, tier:string>",
     )
@@ -3318,7 +3321,8 @@ def iceberg_nested_list_mapping_read(spark, sf_dir):
         for f in _os.listdir(raw_dir)
         if f.endswith(".parquet")
     )
-    shape = spark.createDataFrame(
+    shape = local_frame(
+        spark,
         [],
         "customer_id long, "
         "entries array<struct<seg:string, bal:double, tier:string>>",

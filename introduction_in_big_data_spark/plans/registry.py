@@ -165,8 +165,7 @@ _R4_DRIVER_GREEN = frozenset(
 
 _R5_DRIVER_GREEN = frozenset(
     {
-        "acid_stats_skipping_read", "bpe_encode_stats",
-        "bpe_train_local_merges", "bpe_train_merges",
+        "acid_stats_skipping_read", "bpe_encode_stats", "bpe_train_merges",
         "delta_cdc_replica_state", "delta_cdf_mv_maintenance",
         "delta_column_mapping_read", "delta_deletion_vectors_read",
         "delta_dml_delete_read", "delta_dml_merge_read",
@@ -276,7 +275,7 @@ _R10_DRIVER_GREEN = frozenset(
         # CORRECTNESS_r10: 50/50 green — covers all 16 round-10
         # changed queries plus the round's 2 new ones.
         "acid_schema_evolution", "ann_ivf_topk", "bpe_encode_stats",
-        "bpe_train_local_merges", "cf_knn", "cf_knn_pruned",
+        "cf_knn", "cf_knn_pruned",
         "clean_parts", "daily_revenue_anomalies",
         "delta_column_mapping_cdf_feed", "delta_column_mapping_read",
         "delta_dv_cdf_feed", "delta_type_widening_read",

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from ..streaming import stream as st
 from . import cdf_fixture as _cdf
 from .registry import register, t
@@ -507,7 +508,8 @@ def stream_acid_user_state(spark, sf_dir):
     # the table persists last_event_id purely as the argmax tiebreak:
     # two events can share a microsecond across batches, and the
     # across-batch winner must match the oracle's (ts, event_id) order
-    empty = spark.createDataFrame(
+    empty = local_frame(
+        spark,
         [],
         "user_id long, n_events long, last_epoch_us long, "
         "last_event_id long, last_event_type string",

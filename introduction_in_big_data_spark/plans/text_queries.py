@@ -581,11 +581,11 @@ BPE_MERGES = 6
 def _bpe_oracle(n_merges: int) -> str:
     """Unrolled-CTE replay of BPE training: round r computes weighted
     adjacent-pair counts over the round r-1 dictionary, picks the
-    (cnt DESC, a, b) argmax, and applies it with the same
-    wrapped-symbol replace() the Spark operator uses (' a  b ' ->
-    ' ab ': delimiter-bounded on BOTH sides, so a merge can't fire on
-    a neighboring symbol that merely starts with b — ADVICE r4;
-    identical single-pass semantics in both engines)."""
+    (cnt DESC, a, b) argmax, and applies it with the wrapped-symbol
+    replace() (' a  b ' -> ' ab ': delimiter-bounded on BOTH sides, so
+    a merge can't fire on a neighboring symbol that merely starts with
+    b) — the same single-pass result as bpe_train's driver-side
+    symbol-list scan and bpe_apply_token_counts' Spark replace()."""
     parts = [r"""
         WITH tok AS (
             SELECT unnest(regexp_extract_all(text, '\S+')) AS w FROM documents
@@ -630,48 +630,20 @@ def _bpe_oracle(n_merges: int) -> str:
     # a headline number (dictionary-bounded rounds over one corpus scan)
 )
 def bpe_train_merges(spark, sf_dir):
-    """BPE tokenizer training on the corpus (operators/text.bpe_train,
-    round 4) — the tokenizer-learning step of an LLM pipeline as an
-    engine op. The corpus is scanned ONCE into the word-frequency
-    dictionary; each of the 6 merge rounds runs over the dictionary
-    (vocabulary-bounded, sub-linear in corpus growth), so training
-    cost is decoupled from corpus size — the property that makes
-    in-engine tokenizer training viable at 100 TB. Every learned
-    merge (round, pair, count) is value-hash checked against a DuckDB
-    unrolled-CTE replay, argmax tiebreak (cnt DESC, left, right) on
-    exact integers."""
+    """BPE tokenizer training on the corpus (operators/text.bpe_train)
+    — the tokenizer-learning step of an LLM pipeline as an engine op.
+    The corpus is scanned ONCE, in one Spark job, into the
+    word-frequency dictionary; the merge rounds then run driver-side
+    over the collected dictionary (vocabulary-bounded, sub-linear in
+    corpus growth), so training cost past the scan is decoupled from
+    corpus size. min_count=1 (no dictionary pruning) keeps every
+    learned merge (round, pair, count) value-hash identical to the
+    DuckDB unrolled-CTE replay, argmax tiebreak (cnt DESC, left,
+    right) on exact integers."""
     from ..operators.text import bpe_train
 
-    return bpe_train(t(spark, sf_dir, "documents"), "text", n_merges=BPE_MERGES)
-
-
-@register(
-    "bpe_train_local_merges",
-    oracle=_bpe_oracle(BPE_MERGES),
-    tags=("text", "tokenizer", "bpe", "llm", "iterative"),
-)
-def bpe_train_local_merges(spark, sf_dir):
-    """BPE training via the DRIVER-LOCAL merge-round path
-    (operators/text.bpe_train_local, round 5 — VERDICT r4 #3): the
-    corpus scan stays distributed (tokenize → groupBy(word), one
-    shuffle), the vocabulary-bounded word-frequency dictionary is
-    collected once, and the merge rounds run in pure Python with
-    incremental pair statistics + a lazy-deletion heap — the shape
-    that makes 32k–100k-merge vocabularies affordable (no per-round
-    Spark job scheduling; measured rate in SCALE.md r5). Shares
-    bpe_train_merges' DuckDB oracle because the two paths are
-    merge-for-merge identical on the same corpus (pinned by
-    tests/test_bpe.py parity)."""
-    from ..operators.text import bpe_train_local
-
-    return bpe_train_local(
-        t(spark, sf_dir, "documents"), "text", n_merges=BPE_MERGES,
-        # min_count=1 = no dictionary pruning: bit-identical to the
-        # shared DuckDB oracle at test SFs. Production (open-web)
-        # callers keep the operator's default prune — see the
-        # operator docstring for the Heaps-law argument (VERDICT r9
-        # item 2).
-        min_count=1,
+    return bpe_train(
+        t(spark, sf_dir, "documents"), "text", n_merges=BPE_MERGES, min_count=1
     )
 
 
@@ -736,26 +708,21 @@ def _bpe_encode_oracle(n_merges: int) -> str:
 )
 def bpe_encode_stats(spark, sf_dir):
     """BPE ENCODING with the corpus-trained merges
-    (operators/text.bpe_apply_token_counts, round 4): train the 6
-    merges (bpe_train), then count each document's BPE tokens via the
-    dictionary-join shape — merges apply to the DISTINCT-WORD
+    (operators/text.bpe_apply_token_counts): train the 6 merges
+    (bpe_train, one Spark job), then count each document's BPE tokens
+    via the dictionary-join shape — merges apply to the DISTINCT-WORD
     dictionary only (vocabulary-bounded), the word → symbol-count map
     broadcasts, and per-doc counts are one join + grouped sum; the
     corpus-scale token stream never runs a replace. Both the training
     rounds and the encode join are value-hash checked against one
-    DuckDB chain.
-
-    r5: the merges come from bpe_train_local — merge-for-merge
-    identical to the in-engine rounds (tests/test_bpe.py parity, and
-    bpe_train_merges/bpe_train_local_merges share one oracle) at one
-    Spark job instead of six, so the encode query's builder cost is
-    the corpus scan, not per-round scheduling."""
-    from ..operators.text import bpe_apply_token_counts, bpe_train_local
+    DuckDB chain."""
+    from ..operators.text import bpe_apply_token_counts, bpe_train
 
     docs = t(spark, sf_dir, "documents")
+    # the merge table is a local relation: it collects in round order
     merges = [
         (r.merge_left, r.merge_right)
-        for r in bpe_train_local(
+        for r in bpe_train(
             docs, "text", n_merges=BPE_MERGES, min_count=1
         ).collect()
     ]

@@ -20,7 +20,9 @@ from __future__ import annotations
 import logging
 import os
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 _LOG = logging.getLogger(__name__)
 
@@ -77,6 +79,67 @@ def barrier(df, eager: bool = False):
     if mode == "none":
         return df
     raise ValueError(f"unknown SPARK_GRAFT_BARRIER mode: {mode!r}")
+
+
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """The engine's ONE way to turn driver-held rows into a DataFrame.
+
+    `rows` is any iterable of tuples, lists, dicts or Rows; `schema` a
+    DDL string or StructType. The rows are verified and converted
+    exactly as ``createDataFrame(list, schema)`` does (timestamps and
+    dates through ``DataType.toInternal``, so values are identical in
+    every session time zone), then handed to Spark as a typed Arrow
+    table. Spark plans that as a ``LocalTableScan`` (or, above
+    ``spark.sql.execution.arrow.localRelationThreshold``, a JVM-side
+    Arrow RDD), so no Python worker runs; the list path instead
+    pickles the rows through a ``PythonRDD`` with defaultParallelism
+    Python tasks on every action that touches the frame."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = (
+        schema if isinstance(schema, T.StructType) else T.StructType.fromDDL(schema)
+    )
+    verify = T._make_type_verifier(struct)
+    convert = T._create_converter(struct)
+    internal = []
+    for row in rows:
+        verify(row)
+        internal.append(struct.toInternal(convert(row)))
+    columns = list(zip(*internal)) if internal else [()] * len(struct.fields)
+    batch = pa.RecordBatch.from_arrays(
+        [
+            pa.array(col, _internal_arrow_type(f.dataType))
+            for col, f in zip(columns, struct.fields)
+        ],
+        names=struct.fieldNames(),
+    ).cast(to_arrow_schema(struct))
+    # from ONE batch, not Table.cast: that drops empty chunks, and
+    # pyspark's nested-column timestamp check rejects a column with
+    # zero chunks (every empty frame with an array/struct field)
+    return spark.createDataFrame(pa.Table.from_batches([batch]), struct)
+
+
+def _internal_arrow_type(dt: T.DataType) -> pa.DataType:
+    """Arrow type of `dt`'s Python-internal value (StructType.toInternal
+    output): timestamps are epoch micros, dates epoch days — both cast
+    to their Arrow temporal type afterwards, never re-interpreted."""
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    if isinstance(dt, (T.TimestampType, T.TimestampNTZType)):
+        return pa.int64()
+    if isinstance(dt, T.DateType):
+        return pa.int32()
+    if isinstance(dt, T.ArrayType):
+        return pa.list_(_internal_arrow_type(dt.elementType))
+    if isinstance(dt, T.MapType):
+        return pa.map_(
+            _internal_arrow_type(dt.keyType), _internal_arrow_type(dt.valueType)
+        )
+    if isinstance(dt, T.StructType):
+        return pa.struct(
+            [pa.field(f.name, _internal_arrow_type(f.dataType)) for f in dt.fields]
+        )
+    return to_arrow_type(dt)
 
 
 def default_parallelism() -> int:

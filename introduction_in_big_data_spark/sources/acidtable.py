@@ -43,6 +43,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 
 class CommitConflict(Exception):
     """Another writer committed this version first (optimistic
@@ -315,7 +317,7 @@ class AcidTable:
                 f"snapshot {v} references vacuumed files, e.g. {missing[0]}"
             )
         if not files:
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, [], schema)
         df = self.spark.read.schema(schema).parquet(*files)
         if predicates:
             from . import skipping
@@ -457,7 +459,8 @@ class AcidTable:
             schema = T.StructType.fromJson(
                 json.loads(self._manifest(v_to)["schema"])
             )
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [],
                 T.StructType(
                     schema.fields

@@ -25,6 +25,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import local_frame
+
 
 def _avrocodec_by_value():
     """Register functions/avrocodec (stdlib-only) for by-value
@@ -122,7 +124,8 @@ def read_avro_dir(spark: SparkSession, path: str) -> DataFrame:
     schema = read_avro_schema(files[0])
     ddl = avrocodec.avro_to_spark_ddl(schema)
     col_names = [f["name"] for f in schema["fields"]]
-    paths_df = spark.createDataFrame(
+    paths_df = local_frame(
+        spark,
         [(f,) for f in files], "path string"
     ).repartition(len(files), "path")
 

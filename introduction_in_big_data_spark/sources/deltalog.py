@@ -55,7 +55,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..session import barrier
+from ..session import barrier, local_frame
 
 
 #: the UUID segment of a v2 checkpoint file name
@@ -554,7 +554,8 @@ def _with_dense_index(df: DataFrame, col_name: str, value_fn):
     for pid in sorted(sizes):
         offsets.append((pid, acc))
         acc += sizes[pid]
-    off_df = df.sparkSession.createDataFrame(
+    off_df = local_frame(
+        df.sparkSession,
         offsets or [(0, 0)], "__pid int, __off long"
     )
     w = Window.partitionBy("__pid").orderBy("__mid")
@@ -1875,7 +1876,7 @@ class DeltaLogReader:
             )
 
         if not live:
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, [], schema)
 
         def abspath(p: str) -> str:
             # PROTOCOL.md: add.path is a URL-encoded path RELATIVE to
@@ -1930,7 +1931,8 @@ class DeltaLogReader:
                 )
                 for a in live.values()
             ]
-            rid_df = self.spark.createDataFrame(
+            rid_df = local_frame(
+                self.spark,
                 rid_rows, "__path string, __base long, __default_rcv long"
             )
             df = df.join(F.broadcast(rid_df), "__path", "left")
@@ -2418,7 +2420,8 @@ class DeltaLogReader:
                 continue
             frames.append(df.withColumn("_commit_version", F.lit(v)))
         if not frames:
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [],
                 T.StructType(
                     out_fields
@@ -2549,7 +2552,7 @@ class DeltaLogReader:
                 seen.add(p)
 
         if not new_adds and not born_dv:
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, [], schema)
 
         def abspath(p: str) -> str:
             p = unquote(p)
@@ -2849,7 +2852,8 @@ class DeltaLogReader:
                     int(a.get("defaultRowCommitVersion") or 0),
                 )
             )
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             sorted(rows), "__path string, __base long, __dfrcv long"
         )
 
@@ -4313,7 +4317,8 @@ class DeltaLogReader:
                     )
                     for k, a in live.items()
                 ]
-                pv_df = self.spark.createDataFrame(
+                pv_df = local_frame(
+                    self.spark,
                     pv_rows,
                     T.StructType(
                         [
@@ -4458,7 +4463,7 @@ class DeltaLogReader:
                     [T.StructField("__fp", T.StringType())]
                     + [fields_by_name[c] for c in part_cols]
                 )
-                pv_df = self.spark.createDataFrame(pv_rows, pv_schema)
+                pv_df = local_frame(self.spark, pv_rows, pv_schema)
                 df = df.join(F.broadcast(pv_df), "__fp")
             return df
 
@@ -5121,7 +5126,7 @@ class DeltaLogReader:
         import shutil
 
         tmp = os.path.join(self.path, "__checkpoint_stage")
-        self.spark.createDataFrame(rows, schema).coalesce(1).write.mode(
+        local_frame(self.spark, rows, schema).coalesce(1).write.mode(
             "overwrite"
         ).parquet(tmp)
         src = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
@@ -5381,9 +5386,10 @@ class DeltaLogReader:
         """Decode deletion vectors into a (file_path, pos) DataFrame.
         Small vector sets (≤4 MB of bitmap bytes ≈ ≤1M positions — the
         overwhelmingly common DV regime) decode DRIVER-side into a
-        local DataFrame: the broadcast they feed needs the rows on the
-        driver anyway, and skipping the Python-worker path saves its
-        multi-second cold start on first read. Larger sets decode
+        LocalRelation (session.local_frame): the broadcast they feed
+        needs the rows on the driver anyway, and the local relation
+        runs no Python worker, so a read pays neither a decode job nor
+        the workers' cold start. Larger sets decode
         executor-side: one mapInPandas over the descriptor list, the
         roaring module shipped by value so external-driver workers
         need no repo import (see operators/multimodal)."""
@@ -5399,7 +5405,8 @@ class DeltaLogReader:
                     r[1], r[2], r[3], r[4], int(r[5])
                 )
             ]
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 pairs, "file_path string, pos long"
             )
 
@@ -5408,7 +5415,8 @@ class DeltaLogReader:
         except Exception:  # pragma: no cover — same-cwd runs work anyway
             pass
         decode_one = roaring.positions_from_descriptor
-        desc = self.spark.createDataFrame(
+        desc = local_frame(
+            self.spark,
             dv_rows,
             "data_path string, storage string, payload string, "
             "bin_path string, offset long, size long",
@@ -5483,7 +5491,8 @@ class DeltaLogReader:
         if not pairs:
             return None
         norm = lambda c: F.regexp_replace(c, "^file:/+", "/")  # noqa: E731
-        pairs_df = self.spark.createDataFrame(
+        pairs_df = local_frame(
+            self.spark,
             pairs, "__del_path string, __del_pos long"
         )
         data_schema, sel = self._file_schema_and_logical(
@@ -5582,7 +5591,8 @@ class DeltaLogReader:
                     else F.lit(None).cast(dt),
                 )
             scanned = g if scanned is None else scanned.unionByName(g)
-        pairs_df = self.spark.createDataFrame(
+        pairs_df = local_frame(
+            self.spark,
             pairs, "__del_path string, __del_pos long"
         )
         return (

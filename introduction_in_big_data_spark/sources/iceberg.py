@@ -50,7 +50,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..session import barrier
+from ..session import barrier, local_frame
 
 
 class UnsupportedIcebergFeature(Exception):
@@ -1487,7 +1487,7 @@ def add_equality_deletes(
         p = _stage_parquet(
             spark,
             path,
-            spark.createDataFrame(rows, sub),
+            local_frame(spark, rows, sub),
             fields=[fields[c] for c in columns],
         )
     meta_dir = os.path.join(path, "metadata")
@@ -1533,7 +1533,8 @@ def add_position_deletes(
     os.makedirs(data_dir, exist_ok=True)
     # the position-delete parquet file (spec: file_path, pos)
     tmp = os.path.join(path, "_stage_del")
-    spark.createDataFrame(
+    local_frame(
+        spark,
         [
             (p if p.startswith("file:") else f"file://{p}", int(pos))
             for p, pos in deletes
@@ -2422,7 +2423,8 @@ class IcebergTableReader:
             )
             for s in meta.get("snapshots", [])
         ]
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             rows,
             "snapshot_id long, timestamp_ms long, operation string, "
             "manifest_list string",
@@ -2443,7 +2445,7 @@ class IcebergTableReader:
             "file_size_in_bytes long, spec_id int, partition string"
         )
         if not snaps:
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, [], schema)
         if snapshot_id is None:
             snapshot_id = meta["current-snapshot-id"]
         snapshot = next(
@@ -2475,7 +2477,7 @@ class IcebergTableReader:
                     part_s,
                 )
             )
-        return self.spark.createDataFrame(rows, schema)
+        return local_frame(self.spark, rows, schema)
 
     def partitions_table(self, snapshot_id: int | None = None) -> DataFrame:
         """Per-partition file/row totals — the spec's `tbl.partitions`
@@ -2978,7 +2980,8 @@ class IcebergTableReader:
                 T.StructField("__pos", T.LongType(), False),
             ]
         )
-        paths_df = self.spark.createDataFrame(
+        paths_df = local_frame(
+            self.spark,
             [(p,) for p in files], "path string"
         ).repartition(len(files), "path")
         plan_json = _json.dumps(
@@ -3109,7 +3112,8 @@ class IcebergTableReader:
                 T.StructField("__pos", T.LongType(), False),
             ]
         )
-        paths_df = self.spark.createDataFrame(
+        paths_df = local_frame(
+            self.spark,
             [(p,) for p in files], "path string"
         ).repartition(len(files), "path")
         plan_json = _json.dumps(
@@ -3504,7 +3508,8 @@ class IcebergTableReader:
             if e[1] == "AVRO":
                 _s, rows = avrocodec.read_container(e[0])
                 parts.append(
-                    self.spark.createDataFrame(
+                    local_frame(
+                        self.spark,
                         [(r["file_path"], r["pos"]) for r in rows],
                         "file_path string, pos long",
                     )
@@ -3518,7 +3523,8 @@ class IcebergTableReader:
                 )
         if dv_pairs:
             parts.append(
-                self.spark.createDataFrame(
+                local_frame(
+                    self.spark,
                     dv_pairs, "file_path string, pos long"
                 )
             )
@@ -3548,7 +3554,7 @@ class IcebergTableReader:
         meta = self.metadata()
         snaps = meta.get("snapshots", [])
         if not snaps:
-            return self.spark.createDataFrame([], self._schema_struct(meta))
+            return local_frame(self.spark, [], self._schema_struct(meta))
         if ref is not None:
             if snapshot_id is not None:
                 raise ValueError("pass either snapshot_id or ref, not both")
@@ -3598,7 +3604,7 @@ class IcebergTableReader:
             return df.filter(skipping.residual_filter(predicates))
 
         if not data:
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, [], schema)
         files = [p for p, _seq in data]
         scan_schema = self._scan_schema(meta)
         # ROW LINEAGE (format v3, rounds 8-9): `with_row_ids=True`
@@ -3702,7 +3708,8 @@ class IcebergTableReader:
             df = df.drop("__seq")
 
         if with_row_ids:
-            rid_df = self.spark.createDataFrame(
+            rid_df = local_frame(
+                self.spark,
                 [
                     (p, int(st["first_row_id"]), int(s))
                     for p, (s, st) in data
@@ -3738,7 +3745,8 @@ class IcebergTableReader:
         """Attach each row's data file SEQUENCE number (`__seq`) via a
         broadcast (path, seq) join — the gate equality deletes test."""
         norm = lambda c: F.regexp_replace(c, "^file:/+", "/")  # noqa: E731
-        seq_df = self.spark.createDataFrame(
+        seq_df = local_frame(
+            self.spark,
             [(p, s) for p, (s, _st) in data],
             "file_path string, seq long",
         ).select(
@@ -3876,7 +3884,8 @@ class IcebergTableReader:
             + [T.StructField("__del_seq", T.LongType(), False)]
         )
         out_names = [f"__del_{c}" for c in names]
-        paths_df = self.spark.createDataFrame(
+        paths_df = local_frame(
+            self.spark,
             [(p,) for p in plans], "path string"
         ).repartition(len(plans), "path")
         plan_json = _json.dumps(plans)
@@ -4004,7 +4013,8 @@ class IcebergTableReader:
                     # distributed branch above) and this join side
                     # broadcasts regardless, so the cost class is
                     # unchanged
-                    src = self.spark.createDataFrame(
+                    src = local_frame(
+                        self.spark,
                         self._eq_delete_avro_rows(p, names, ids, meta),
                         T.StructType([scan_schema[c] for c in names]),
                     )
@@ -4540,7 +4550,8 @@ class IcebergTableReader:
         lineage = meta.get("next-row-id") is not None
         scan = self._dml_scan(meta, files, with_lineage_col=lineage)
         if lineage:
-            rid_df = self.spark.createDataFrame(
+            rid_df = local_frame(
+                self.spark,
                 [
                     (p, int(st["first_row_id"]))
                     for p, (_s, st) in candidates
@@ -4697,7 +4708,8 @@ class IcebergTableReader:
         lineage = meta.get("next-row-id") is not None
         scan = self._dml_scan(meta, files, with_lineage_col=lineage)
         if lineage:
-            rid_df = self.spark.createDataFrame(
+            rid_df = local_frame(
+                self.spark,
                 [
                     (p, int(st["first_row_id"]))
                     for p, (_s, st) in candidates
@@ -5078,7 +5090,8 @@ class IcebergTableReader:
                     scan, eq, meta, cand
                 )
             if lineage:
-                rid_df = self.spark.createDataFrame(
+                rid_df = local_frame(
+                    self.spark,
                     [
                         (p, int(st["first_row_id"]), int(s))
                         for p, (s, st) in cand
@@ -5686,7 +5699,7 @@ class IcebergTableReader:
         new = sorted(p for p, _ in d_to if p not in from_paths)
         schema = self._schema_struct(meta)
         if not new:
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, [], schema)
         # routed through _data_scan (round 10): appended files project
         # exactly as snapshot reads do — field-id projection on evolved
         # tables and the per-file name-mapping branch for id-less
@@ -5769,7 +5782,7 @@ class IcebergTableReader:
             if step is not None:
                 parts.append(step)
         if not parts:
-            return self.spark.createDataFrame([], out_schema)
+            return local_frame(self.spark, [], out_schema)
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)

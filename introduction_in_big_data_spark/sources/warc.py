@@ -38,6 +38,8 @@ import uuid as _uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import local_frame
+
 
 class WarcError(Exception):
     pass
@@ -253,7 +255,8 @@ def read_warc(
                     rows["body"].append(body)
                 yield pd.DataFrame(rows)
 
-    file_df = spark.createDataFrame(
+    file_df = local_frame(
+        spark,
         [(f,) for f in files], "path string"
     ).repartition(len(files))
     return file_df.mapInPandas(scan, _SCHEMA)

@@ -17,6 +17,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..operators import sketch
+from ..session import local_frame
 
 
 class StreamingCMS:
@@ -47,7 +48,11 @@ class StreamingCMS:
 
     def estimate(self, spark, keys: DataFrame) -> DataFrame:
         assert self._acc is not None, "no batches processed yet"
-        acc_df = spark.createDataFrame(self._acc, "depth int, bucket int, cnt long")
+        acc_df = local_frame(
+            spark,
+            self._acc[["depth", "bucket", "cnt"]].itertuples(index=False, name=None),
+            "depth int, bucket int, cnt long",
+        )
         return sketch.cms_estimate(acc_df, keys, self.column, self.width, self.depth)
 
 

@@ -29,6 +29,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 STAGE_ROOT = "/tmp/ibd_spark_stream"
 
 
@@ -124,7 +126,8 @@ def events_stream_with_flush(
             os.utime(p, (base + i, base + i))
         mx = events.agg(F.max("ts")).collect()[0][0]
         flush_ts = mx + _dt.timedelta(days=flush_days)
-        sentinels = spark.createDataFrame(
+        sentinels = local_frame(
+            spark,
             [
                 tuple(
                     {

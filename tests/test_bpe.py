@@ -3,20 +3,37 @@
 Pins the ADVICE-r4 right-boundary fix (wrapped-symbol representation:
 ' a  b ' -> ' ab ' is delimiter-bounded on BOTH sides, so a merge
 can't fire on a neighboring symbol that merely starts with the right
-part) and the VERDICT-r5 driver-local training path's merge-for-merge
-parity with the in-engine form.
+part) and the trainer's merge-for-merge parity with the DuckDB
+unrolled-CTE replay run on the same corpus — an independent engine.
 """
 
 from __future__ import annotations
 
+import duckdb
 from pyspark.sql import functions as F
 
 from introduction_in_big_data_spark.operators.text import (
     _bpe_merges_from_word_freqs,
     bpe_apply_token_counts,
     bpe_train,
-    bpe_train_local,
 )
+from introduction_in_big_data_spark.plans.text_queries import _bpe_oracle
+
+
+def _duckdb_merges(docs, n_merges):
+    """The registry oracle's BPE replay over `docs` (doc_id, text),
+    as (round, left, right, count) tuples in round order."""
+    con = duckdb.connect()
+    try:
+        con.register("documents", docs.toPandas())
+        return [
+            (int(r), a, b, int(c))
+            for r, a, b, c in con.execute(
+                f"SELECT * FROM ({_bpe_oracle(n_merges)}) ORDER BY merge_round"
+            ).fetchall()
+        ]
+    finally:
+        con.close()
 
 
 def test_merge_does_not_cross_symbol_right_boundary(spark):
@@ -61,10 +78,10 @@ def test_adjacent_run_merges_fully_in_one_pass(spark):
     assert aa[1] == 4 and aa[2] == 2
 
 
-def test_driver_local_parity_with_in_engine(spark):
-    """bpe_train_local must produce bit-identical merges to the
-    in-engine bpe_train on the same corpus — same argmax tiebreak
-    (count DESC, left, right), same application semantics."""
+def test_bpe_train_parity_with_duckdb_replay(spark):
+    """bpe_train must produce bit-identical merges to the DuckDB
+    replay on the same corpus — same argmax tiebreak (count DESC,
+    left, right), same application semantics."""
     docs = spark.createDataFrame(
         [
             (1, "low low low lower lowest"),
@@ -74,20 +91,15 @@ def test_driver_local_parity_with_in_engine(spark):
         ],
         "doc_id long, text string",
     )
-    engine = [
+    oracle = _duckdb_merges(docs, 8)
+    trained = [
         (r.merge_round, r.merge_left, r.merge_right, r.pair_count)
-        for r in bpe_train(docs, "text", n_merges=8)
+        for r in bpe_train(docs, "text", n_merges=8, min_count=1)
         .orderBy("merge_round")
         .collect()
     ]
-    local = [
-        (r.merge_round, r.merge_left, r.merge_right, r.pair_count)
-        for r in bpe_train_local(docs, "text", n_merges=8, min_count=1)
-        .orderBy("merge_round")
-        .collect()
-    ]
-    assert engine == local
-    assert len(engine) == 8
+    assert oracle == trained
+    assert len(oracle) == 8
 
 
 def test_local_merge_counts_non_increasing_and_exhaustion():
@@ -102,30 +114,25 @@ def test_local_merge_counts_non_increasing_and_exhaustion():
     assert len(merges) < 100
 
 
-def test_local_thousand_merges_on_rich_vocab(spark):
-    """Realistic-vocab path: 1000 merge rounds run driver-local with
-    no per-round Spark jobs (the sf0.001 documents vocabulary exhausts
-    at ~90 merges, so this uses a deterministic 3000-word hex corpus)
-    and stay merge-for-merge consistent with the in-engine twin on the
+def test_thousand_merges_on_rich_vocab(spark):
+    """Realistic-vocab path: 1000 merge rounds run driver-side with no
+    per-round Spark jobs (the sf0.001 documents vocabulary exhausts at
+    ~90 merges, so this uses a deterministic 3000-word hex corpus) and
+    stay merge-for-merge consistent with the DuckDB replay on the
     first rounds."""
     docs = spark.range(3000).select(
         F.col("id").alias("doc_id"),
         F.md5(F.col("id").cast("string")).alias("text"),
     )
-    local = [
+    trained = [
         (r.merge_left, r.merge_right)
-        for r in bpe_train_local(docs, "text", n_merges=1000, min_count=1)
+        for r in bpe_train(docs, "text", n_merges=1000, min_count=1)
         .orderBy("merge_round")
         .collect()
     ]
-    assert len(local) == 1000
-    engine = [
-        (r.merge_left, r.merge_right)
-        for r in bpe_train(docs, "text", n_merges=6)
-        .orderBy("merge_round")
-        .collect()
-    ]
-    assert local[:6] == engine
+    assert len(trained) == 1000
+    oracle = [(a, b) for _r, a, b, _c in _duckdb_merges(docs, 6)]
+    assert trained[:6] == oracle
 
 
 def test_local_min_count_prunes_driver_dictionary(spark):
@@ -149,7 +156,7 @@ def test_local_min_count_prunes_driver_dictionary(spark):
     def merges(df, min_count):
         return [
             (r.merge_round, r.merge_left, r.merge_right, r.pair_count)
-            for r in bpe_train_local(df, "text", n_merges=12, min_count=min_count)
+            for r in bpe_train(df, "text", n_merges=12, min_count=min_count)
             .orderBy("merge_round")
             .collect()
         ]
