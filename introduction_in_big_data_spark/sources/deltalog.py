@@ -48,6 +48,8 @@ from __future__ import annotations
 import json
 import os
 import re
+from collections.abc import Callable
+from dataclasses import dataclass, field
 from urllib.parse import quote, unquote
 from uuid import uuid4
 
@@ -56,6 +58,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..session import barrier, local_frame
+from . import rowlevel
 
 
 #: the UUID segment of a v2 checkpoint file name
@@ -184,6 +187,61 @@ def _hive_partition_values(rel: str) -> dict:
                 None if val == "__HIVE_DEFAULT_PARTITION__" else unquote(val)
             )
     return pv
+
+
+def _pv_sort_key(key: tuple) -> tuple:
+    """Sort key for partition-value tuples mixing None (a null
+    partition) and str — plain sorted() would raise comparing them;
+    nulls first per column."""
+    return tuple((v is not None, v or "") for v in key)
+
+
+def _with_partition_literals(
+    df: DataFrame,
+    part_cols: list[str],
+    raw: tuple,
+    fields_by_name: dict[str, T.StructField],
+) -> DataFrame:
+    """Attach one partition group's columns as typed literals cast
+    from their raw partitionValues strings (a None is the protocol's
+    null partition value)."""
+    for c, v in zip(part_cols, raw):
+        df = df.withColumn(c, F.lit(v).cast(fields_by_name[c].dataType))
+    return df
+
+
+@dataclass
+class _DmlContext:
+    """One DML statement's view of the table (DeltaLogReader.
+    _dml_context): the replayed snapshot, its schema resolved for
+    reading and writing data files and, for predicate DML, the
+    skipping-driven file classification. Row-tracking state fills in
+    via _rt_begin and `hwm` advances as _write_data_files allocates
+    baseRowId ranges."""
+
+    v: int
+    meta: dict
+    live: dict[str, dict]
+    schema: T.StructType
+    part_cols: list[str]
+    fields_by_name: dict[str, T.StructField]
+    data_fields: list[T.StructField]
+    mode: str
+    file_schema: T.StructType
+    logical_sel: list
+    phys_sel: list | None
+    write_schema: T.StructType
+    stats_fields: list[T.StructField]
+    pv_key: Callable[[str], str]
+    carries_stats: bool
+    rt: bool
+    data_preds: list = field(default_factory=list)
+    removes: list[str] = field(default_factory=list)
+    candidates: dict[str, dict] = field(default_factory=dict)
+    mat_id: str | None = None
+    mat_rcv: str | None = None
+    rt_actions: list[dict] = field(default_factory=list)
+    hwm: int = -1
 
 
 def _per_file_stats(scan: DataFrame, fields: list[T.StructField]) -> dict:
@@ -341,9 +399,7 @@ def shallow_clone(spark: SparkSession, src_path: str, dst_path: str) -> int:
         a = dict(live[p])
         dv = a.get("deletionVector")
         if dv and dv.get("storageType") != "i":
-            (_dp, _st, _inline, bin_path, off, _sz) = src._dv_descriptor(
-                a, src._abs
-            )
+            (_dp, _st, _inline, bin_path, off, _sz) = src._dv_descriptor(a)
             a["deletionVector"] = {
                 **dv,
                 "storageType": "p",
@@ -1012,8 +1068,6 @@ def enable_row_tracking(spark: SparkSession, path: str) -> None:
     Since round 9 this composes with DML: DV deletes preserve
     survivor ids, appends allocate fresh ids from the high-water
     mark, DV updates materialize survivor ids."""
-    import pyarrow.parquet as pq
-
     c0 = os.path.join(path, "_delta_log", f"{0:020d}.json")
     acts = [json.loads(ln) for ln in open(c0) if ln.strip()]
     base = 0
@@ -1763,7 +1817,6 @@ class DeltaLogReader:
         # round 9 (delete/update/merge maintain ids through the
         # materialized columns — see update_where_dv / merge); this
         # read path resolves whatever a writer materialized.
-        row_meta: dict[str, tuple[int | None, int | None]] = {}
         conf = meta.get("configuration") or {}
         mat_id_col = conf.get(
             "delta.rowTracking.materializedRowIdColumnName"
@@ -1878,22 +1931,11 @@ class DeltaLogReader:
         if not live:
             return local_frame(self.spark, [], schema)
 
-        def abspath(p: str) -> str:
-            # PROTOCOL.md: add.path is a URL-encoded path RELATIVE to
-            # the table root (external writers encode spaces, '=', '%',
-            # non-ASCII in file and partition-directory names). Decode
-            # when resolving to the filesystem; the encoded form stays
-            # the live-set dict key for add/remove reconciliation.
-            p = unquote(p)
-            return p if p.startswith("/") else os.path.join(self.path, p)
-
         dv_rows = [
-            self._dv_descriptor(a, abspath)
+            self._dv_descriptor(a)
             for a in live.values()
             if a.get("deletionVector")
         ]
-        norm = lambda c: F.regexp_replace(c, "^file:/+", "/")  # noqa: E731
-
         need_pos = bool(dv_rows) or with_row_ids
 
         def logical(scanned: DataFrame) -> DataFrame:
@@ -1910,10 +1952,7 @@ class DeltaLogReader:
                 # _metadata is only resolvable on the scan-rooted
                 # frame, so the position columns ride along from the
                 # first projection until the anti-join strips them
-                cols += [
-                    norm(F.col("_metadata.file_path")).alias("__path"),
-                    F.col("_metadata.row_index").alias("__pos"),
-                ]
+                cols += rowlevel.position_cols()
             return scanned.select(*cols)
 
         def attach_row_ids(df: DataFrame) -> DataFrame:
@@ -1921,7 +1960,7 @@ class DeltaLogReader:
                 return df
             rid_rows = [
                 (
-                    abspath(a["path"]),
+                    self._abs(a["path"]),
                     int(a["baseRowId"]),
                     (
                         int(a["defaultRowCommitVersion"])
@@ -1950,30 +1989,14 @@ class DeltaLogReader:
 
         def finish(df: DataFrame) -> DataFrame:
             df = attach_row_ids(df)
-            df = apply_dvs(df)
-            if need_pos and not dv_rows:
-                df = df.drop("__path", "__pos")
-            return df
-
-        def apply_dvs(df: DataFrame) -> DataFrame:
-            if not dv_rows:
-                return df
-            pos_df = self._dv_positions_df(dv_rows).select(
-                norm(F.col("file_path")).alias("__del_path"),
-                F.col("pos").alias("__del_pos"),
-            )
-            return (
-                df.join(
-                    F.broadcast(pos_df),
-                    (F.col("__path") == F.col("__del_path"))
-                    & (F.col("__pos") == F.col("__del_pos")),
-                    "left_anti",
+            if dv_rows:
+                df = rowlevel.join_tombstones(
+                    df, self._dv_positions_df(dv_rows)
                 )
-                .drop("__path", "__pos")
-            )
+            return df.drop("__path", "__pos") if need_pos else df
 
         if not part_cols:
-            files = sorted(abspath(a["path"]) for a in live.values())
+            files = sorted(self._abs(a["path"]) for a in live.values())
             return residual(
                 finish(
                     logical(
@@ -1989,28 +2012,22 @@ class DeltaLogReader:
         for a in live.values():
             pv = a.get("partitionValues") or {}
             key = tuple(pv.get(phys(fields_by_name[c])) for c in part_cols)
-            groups.setdefault(key, []).append(abspath(a["path"]))
+            groups.setdefault(key, []).append(self._abs(a["path"]))
         out: DataFrame | None = None
-        # keys mix None (null partition) and str — plain sorted() would
-        # raise TypeError comparing them; order only stabilizes the
-        # union, so sort None-safe (nulls first per column)
-        for key, files in sorted(
-            groups.items(),
-            key=lambda kv: tuple((v is not None, v or "") for v in kv[0]),
-        ):
-            part = logical(
-                self.spark.read.schema(data_schema).parquet(*sorted(files))
+        # order only stabilizes the union
+        for key in sorted(groups, key=_pv_sort_key):
+            # protocol: partitionValues serializes a NULL as the
+            # absence of the key or a JSON null; values are strings
+            part = _with_partition_literals(
+                logical(
+                    self.spark.read.schema(data_schema).parquet(
+                        *sorted(groups[key])
+                    )
+                ),
+                part_cols,
+                key,
+                fields_by_name,
             )
-            for c, raw in zip(part_cols, key):
-                # protocol: partitionValues serializes a NULL as the
-                # absence of the key or a JSON null; values are strings
-                dt = fields_by_name[c].dataType
-                lit = (
-                    F.lit(raw).cast(dt)
-                    if raw is not None
-                    else F.lit(None).cast(dt)
-                )
-                part = part.withColumn(c, lit)
             keep = (
                 [f.name for f in schema.fields]
                 + mat_cols
@@ -2115,6 +2132,7 @@ class DeltaLogReader:
         part_cols: list[str],
         fields_by_name: dict[str, T.StructField],
         mode: str = "none",
+        positions: bool = False,
     ) -> DataFrame | None:
         """Scan (abs_path, partitionValues) pairs into logical rows:
         group files by partition tuple, one scan per group with the
@@ -2123,33 +2141,31 @@ class DeltaLogReader:
         `file_fields` is the LOGICAL form of what the files contain
         (physical names resolve from the column-mapping `mode`);
         `out_fields` the projection (partition columns resolved from
-        the pv dicts). Returns None when `entries` is empty."""
+        the pv dicts); `positions` keeps each row's `__path` /
+        `__pos`. Returns None when `entries` is empty."""
         if not entries:
             return None
         file_schema, sel = self._file_schema_and_logical(file_fields, mode)
         pv_key = self._pv_key(fields_by_name, mode)
+        pos = rowlevel.position_cols() if positions else []
         groups: dict[tuple, list[str]] = {}
         for p, pv in entries:
             groups.setdefault(
                 tuple(pv.get(pv_key(c)) for c in part_cols), []
             ).append(p)
         out: DataFrame | None = None
-        for key, files in sorted(
-            groups.items(),
-            key=lambda kv: tuple((v is not None, v or "") for v in kv[0]),
-        ):
-            part = self.spark.read.schema(file_schema).parquet(
-                *sorted(files)
-            ).select(*sel)
-            for c, raw in zip(part_cols, key):
-                dt = fields_by_name[c].dataType
-                part = part.withColumn(
-                    c,
-                    F.lit(raw).cast(dt)
-                    if raw is not None
-                    else F.lit(None).cast(dt),
-                )
-            part = part.select(*[f.name for f in out_fields])
+        for key in sorted(groups, key=_pv_sort_key):
+            part = _with_partition_literals(
+                self.spark.read.schema(file_schema)
+                .parquet(*sorted(groups[key]))
+                .select(*sel, *pos),
+                part_cols,
+                key,
+                fields_by_name,
+            ).select(
+                *[f.name for f in out_fields],
+                *(["__path", "__pos"] if positions else []),
+            )
             out = part if out is None else out.unionByName(part)
         return out
 
@@ -2169,8 +2185,6 @@ class DeltaLogReader:
         mapping the change files carry PHYSICAL column names (and
         hive directories physical partition names), exactly like data
         files — `_change_type` stays literal in every mode."""
-        import pyarrow.parquet as pq
-
         write_part_cols = list(part_cols)
         if mode != "none":
             cdc_df = cdc_df.select(
@@ -2251,10 +2265,6 @@ class DeltaLogReader:
         ct = T.StructField("_change_type", T.StringType())
         out_fields = list(schema.fields) + [ct]
 
-        def abspath(p: str) -> str:
-            p = unquote(p)
-            return p if p.startswith("/") else os.path.join(self.path, p)
-
         frames: list[DataFrame] = []
         # live-set tracker: ONE forward pass (remove actions may omit
         # partitionValues, so delete rendering needs each removed
@@ -2276,7 +2286,7 @@ class DeltaLogReader:
             ]
             if cdcs:
                 ents = [
-                    (abspath(c["path"]), c.get("partitionValues") or {})
+                    (self._abs(c["path"]), c.get("partitionValues") or {})
                     for c in cdcs
                 ]
                 gone = [p for p, _pv in ents if not os.path.exists(p)]
@@ -2330,70 +2340,23 @@ class DeltaLogReader:
                         "disabled) — row-level changes are not "
                         "derivable"
                     )
-                ins = self._scan_with_parts(
-                    [
-                        (abspath(a["path"]), a.get("partitionValues") or {})
-                        for a in plain_adds
-                    ],
-                    data_fields,
-                    list(schema.fields),
-                    part_cols,
-                    fields_by_name,
-                    mode,
+                ins = self._rows_of(
+                    plain_adds + born_with_dv, schema, data_fields,
+                    part_cols, fields_by_name, mode,
                 )
-                born_ins = self._dv_live_rows(
-                    born_with_dv, schema, data_fields, part_cols,
-                    fields_by_name, abspath, mode,
+                # whole-file removes of files that already carry a
+                # deletion vector render only their LIVE rows: the
+                # tombstoned positions were already emitted as deletes
+                # by the commit that grew the vector, so re-scanning
+                # the full file would double-count them in the feed
+                # (exactly what read() avoids by applying the vector).
+                dels = self._rows_of(
+                    [prev_live.get(r["path"]) or r for r in plain_removes],
+                    schema, data_fields, part_cols, fields_by_name, mode,
                 )
-                if born_ins is not None:
-                    ins = (
-                        born_ins
-                        if ins is None
-                        else ins.unionByName(born_ins)
-                    )
-                dels = None
-                if plain_removes:
-                    # whole-file removes of files that already carry a
-                    # deletion vector render only their LIVE rows: the
-                    # tombstoned positions were already emitted as
-                    # deletes by the commit that grew the vector, so
-                    # re-scanning the full file would double-count them
-                    # in the feed (exactly what read() avoids by
-                    # applying the vector).
-                    ents = []
-                    dv_removed: list[dict] = []
-                    for r in plain_removes:
-                        a = prev_live.get(r["path"]) or r
-                        if a.get("deletionVector"):
-                            dv_removed.append(a)
-                        else:
-                            ents.append(
-                                (
-                                    abspath(r["path"]),
-                                    a.get("partitionValues") or {},
-                                )
-                            )
-                    dels = self._scan_with_parts(
-                        ents,
-                        data_fields,
-                        list(schema.fields),
-                        part_cols,
-                        fields_by_name,
-                        mode,
-                    )
-                    live_dels = self._dv_live_rows(
-                        dv_removed, schema, data_fields, part_cols,
-                        fields_by_name, abspath, mode,
-                    )
-                    if live_dels is not None:
-                        dels = (
-                            live_dels
-                            if dels is None
-                            else dels.unionByName(live_dels)
-                        )
                 dv_dels = self._dv_transition_deletes(
                     dv_transitions, schema, data_fields, part_cols,
-                    fields_by_name, abspath, mode,
+                    fields_by_name, mode,
                 )
                 parts = [
                     p.withColumn("_change_type", F.lit(tag))
@@ -2513,10 +2476,6 @@ class DeltaLogReader:
         part_cols = self._logical_part_cols(meta, schema)
         fields_by_name = {f.name: f for f in schema.fields}
         data_fields = [f for f in schema.fields if f.name not in part_cols]
-        data_schema, logical_sel = self._file_schema_and_logical(
-            data_fields, mode
-        )
-        pv_key = self._pv_key(fields_by_name, mode)
 
         _meta0, live_before = self._replay(from_version)
         seen: set[str] = set(live_before)
@@ -2553,85 +2512,12 @@ class DeltaLogReader:
 
         if not new_adds and not born_dv:
             return local_frame(self.spark, [], schema)
-
-        def abspath(p: str) -> str:
-            p = unquote(p)
-            return p if p.startswith("/") else os.path.join(self.path, p)
-
-        norm = lambda c: F.regexp_replace(c, "^file:/+", "/")  # noqa: E731
-
-        def render(adds: dict[str, dict], dv: bool) -> DataFrame | None:
-            """Scan a set of adds; dv=True anti-joins each file's birth
-            bitmap out (the live complement — CDF's insert rendering
-            for born-with-DV files)."""
-            if not adds:
-                return None
-
-            def one(files: list[str]) -> DataFrame:
-                scan = self.spark.read.schema(data_schema).parquet(
-                    *sorted(files)
-                )
-                if not dv:
-                    return scan.select(*logical_sel)
-                scan = scan.select(
-                    *logical_sel,
-                    norm(F.col("_metadata.file_path")).alias("__path"),
-                    F.col("_metadata.row_index").alias("__pos"),
-                )
-                pos_df = self._dv_positions_df(
-                    [
-                        self._dv_descriptor(a, abspath)
-                        for a in adds.values()
-                    ]
-                ).select(
-                    norm(F.col("file_path")).alias("__del_path"),
-                    F.col("pos").alias("__del_pos"),
-                )
-                return scan.join(
-                    F.broadcast(pos_df),
-                    (F.col("__path") == F.col("__del_path"))
-                    & (F.col("__pos") == F.col("__del_pos")),
-                    "left_anti",
-                ).drop("__path", "__pos")
-
-            if not part_cols:
-                return one([abspath(a["path"]) for a in adds.values()])
-            groups: dict[tuple, list[str]] = {}
-            for p, a in adds.items():
-                pv = a.get("partitionValues") or {}
-                key = tuple(pv.get(pv_key(c)) for c in part_cols)
-                groups.setdefault(key, []).append(abspath(a["path"]))
-            out: DataFrame | None = None
-            for key, files in sorted(
-                groups.items(),
-                key=lambda kv: tuple(
-                    (v is not None, v or "") for v in kv[0]
-                ),
-            ):
-                part = one(files)
-                for c, raw in zip(part_cols, key):
-                    dt = fields_by_name[c].dataType
-                    lit = (
-                        F.lit(raw).cast(dt)
-                        if raw is not None
-                        else F.lit(None).cast(dt)
-                    )
-                    part = part.withColumn(c, lit)
-                part = part.select(*[f.name for f in schema.fields])
-                out = part if out is None else out.unionByName(part)
-            return out
-
-        plain = render(new_adds, dv=False)
-        complement = render(born_dv, dv=True)
-        if plain is not None and not part_cols:
-            plain = plain.select(*[f.name for f in schema.fields])
-        if complement is not None and not part_cols:
-            complement = complement.select(*[f.name for f in schema.fields])
-        if plain is None:
-            return complement
-        if complement is None:
-            return plain
-        return plain.unionByName(complement)
+        # born-with-DV files contribute their live complement: CDF's
+        # insert rendering, the birth bitmap anti-joined out
+        return self._rows_of(
+            list(new_adds.values()) + list(born_dv.values()),
+            schema, data_fields, part_cols, fields_by_name, mode,
+        )
 
     # -- DML / maintenance on external tables (round 5) ---------------------
     #
@@ -2835,7 +2721,7 @@ class DeltaLogReader:
         )
         return mat_id, mat_rcv, actions
 
-    def _rt_base_map_df(self, adds, abspath) -> DataFrame:
+    def _rt_base_map_df(self, adds) -> DataFrame:
         """(path, baseRowId, defaultRowCommitVersion) broadcast side
         for deriving survivor lineage during a rewrite."""
         rows = []
@@ -2847,7 +2733,7 @@ class DeltaLogReader:
                 )
             rows.append(
                 (
-                    abspath(a["path"]),
+                    self._abs(a["path"]),
                     int(a["baseRowId"]),
                     int(a.get("defaultRowCommitVersion") or 0),
                 )
@@ -3050,6 +2936,294 @@ class DeltaLogReader:
             )
         return sel, T.StructType(phys_fields), phys_fields
 
+    def _dml_context(
+        self,
+        op: str,
+        predicates: list | None = None,
+        set_exprs: dict[str, str] | None = None,
+        whole_file_removes: bool = False,
+        removes_data: bool = True,
+    ) -> _DmlContext:
+        """Replay, guard and resolve the table for one DML statement.
+
+        With `predicates` (conjunctive (column, op, literal) —
+        sources/skipping.py) the live files are classified the way
+        reads skip them: a file whose partition values fail a
+        partition conjunct, or whose stats prove no row matches,
+        carries by reference (no action at all); with
+        `whole_file_removes`, a file every row of which matches (the
+        predicate names only partition columns) lands in `removes` —
+        a metadata-only delete; every other file is a `candidate`
+        that may hold a matching row. `set_exprs` are UPDATE
+        assignments, validated here."""
+        from . import skipping
+
+        v = self.latest_version()
+        meta, live = self._replay(v)
+        self._guard_writer_protocol(
+            meta, op, removes_data=removes_data,
+            # every DML path maintains row ids: rewrites materialize
+            # survivor ids + commit versions, vector re-adds keep the
+            # file's baseRowId, and whole-file removes retire ids
+            # without reissuing them (the high-water mark never drops)
+            maintains_row_ids=True,
+        )
+        schema = self._schema_from_meta(meta)
+        part_cols = self._logical_part_cols(meta, schema)
+        if predicates is not None:
+            skipping.validate(predicates, schema.fieldNames())
+        if set_exprs is not None:
+            rowlevel.check_assignments(
+                op, set_exprs, schema.fieldNames(), part_cols
+            )
+        fields_by_name = {f.name: f for f in schema.fields}
+        data_fields = [f for f in schema.fields if f.name not in part_cols]
+        mode = self._mapping_mode(meta)
+        file_schema, logical_sel = self._file_schema_and_logical(
+            data_fields, mode
+        )
+        phys_sel, write_schema, stats_fields = self._write_side(
+            data_fields, mode
+        )
+        ctx = _DmlContext(
+            v=v, meta=meta, live=live, schema=schema, part_cols=part_cols,
+            fields_by_name=fields_by_name, data_fields=data_fields,
+            mode=mode, file_schema=file_schema, logical_sel=logical_sel,
+            phys_sel=phys_sel, write_schema=write_schema,
+            stats_fields=stats_fields,
+            pv_key=self._pv_key(fields_by_name, mode),
+            carries_stats=any("stats" in a for a in live.values()),
+            rt=self._row_tracking_on(meta),
+        )
+        if predicates is None:
+            return ctx
+        relabel = self._stats_relabel(data_fields, mode)
+        part_preds = [p for p in predicates if p[0] in part_cols]
+        ctx.data_preds = [p for p in predicates if p[0] not in part_cols]
+        for key, a in live.items():
+            pv = a.get("partitionValues") or {}
+            if not all(
+                skipping._exact_may_match(
+                    self._py_partition_value(
+                        pv.get(ctx.pv_key(c)), fields_by_name[c].dataType
+                    ),
+                    cmp,
+                    lit,
+                )
+                for c, cmp, lit in part_preds
+            ):
+                continue  # a partition conjunct is false: no row matches
+            if not ctx.data_preds and whole_file_removes:
+                ctx.removes.append(key)  # every row of the file matches
+                continue
+            if ctx.data_preds:
+                minv, maxv, nullc, rows = skipping.parse_delta_stats(
+                    a.get("stats")
+                )
+                if not skipping.file_may_match(
+                    ctx.data_preds, {}, relabel(minv), relabel(maxv),
+                    relabel(nullc), rows,
+                ):
+                    continue  # stats prove no matching row
+            ctx.candidates[key] = a
+        return ctx
+
+    def _rt_begin(self, ctx: _DmlContext, need_rcv: bool = True) -> None:
+        """On a row-tracking table, get-or-assign the materialized
+        lineage columns (a first assignment commits its metaData
+        update with the statement) and read the row-id high-water
+        mark that _write_data_files allocates fresh ranges from."""
+        if ctx.rt:
+            ctx.mat_id, ctx.mat_rcv, ctx.rt_actions = (
+                self._rt_materialized_cols(ctx.meta, need_rcv=need_rcv)
+            )
+            ctx.hwm = self._row_id_high_water_mark(ctx.live)
+
+    def _dml_publish(self, ctx: _DmlContext, actions: list[dict]) -> int:
+        """Commit a statement begun with _rt_begin: on a row-tracking
+        table its lineage actions and the advanced high-water mark
+        (atomically with the adds whose ids it covers) precede
+        `actions`."""
+        if ctx.rt:
+            actions = (
+                ctx.rt_actions + [self._rt_domain_action(ctx.hwm)] + actions
+            )
+        return self._publish(self._next_version(), actions)
+
+    def _partition_groups(
+        self, ctx: _DmlContext, adds
+    ) -> list[tuple[tuple, list[dict]]]:
+        """`adds` grouped by partition tuple (raw partitionValues
+        strings, logical column order), groups in None-first order."""
+        groups: dict[tuple, list[dict]] = {}
+        for a in adds:
+            pv = a.get("partitionValues") or {}
+            groups.setdefault(
+                tuple(pv.get(ctx.pv_key(c)) for c in ctx.part_cols), []
+            ).append(a)
+        return [(k, groups[k]) for k in sorted(groups, key=_pv_sort_key)]
+
+    def _scan_live_rows(
+        self,
+        ctx: _DmlContext,
+        adds,
+        lineage: bool = False,
+        positions: bool = False,
+    ) -> DataFrame:
+        """The live rows of `adds` as logical data columns (partition
+        columns are the caller's): deletion vectors applied through
+        rowlevel's broadcast (path, pos) anti-join. `lineage` adds each
+        row's `__rid` / `__rcv` — its materialized value, else
+        baseRowId + position / the add's defaultRowCommitVersion (the
+        read path's rule) — after _rt_begin; `positions` keeps the
+        `__path` / `__pos` columns."""
+        mat = [c for c in (ctx.mat_id, ctx.mat_rcv) if c] if lineage else []
+        scan = self.spark.read.schema(
+            T.StructType(
+                list(ctx.file_schema.fields)
+                + [T.StructField(c, T.LongType(), True) for c in mat]
+            )
+        ).parquet(*sorted(self._abs(a["path"]) for a in adds))
+        dv_rows = [
+            self._dv_descriptor(a) for a in adds if a.get("deletionVector")
+        ]
+        if not (dv_rows or lineage or positions):
+            return scan.select(*ctx.logical_sel)
+        df = scan.select(
+            *ctx.logical_sel,
+            *[F.col(c) for c in mat],
+            *rowlevel.position_cols(),
+        )
+        if dv_rows:
+            df = rowlevel.join_tombstones(df, self._dv_positions_df(dv_rows))
+        if lineage:
+            rid = F.col("__base") + F.col("__pos")
+            rcv = F.col("__dfrcv")
+            df = (
+                df.join(
+                    F.broadcast(self._rt_base_map_df(adds)), "__path", "left"
+                )
+                .withColumn("__rid", F.coalesce(F.col(ctx.mat_id), rid))
+                .withColumn(
+                    "__rcv",
+                    F.coalesce(F.col(ctx.mat_rcv), rcv)
+                    if ctx.mat_rcv
+                    else rcv,
+                )
+                .drop("__base", "__dfrcv", *mat)
+            )
+        return df if positions else df.drop("__path", "__pos")
+
+    def _write_data_files(
+        self,
+        ctx: _DmlContext,
+        df: DataFrame,
+        kind: str,
+        pv: dict | None = None,
+        data_change: bool = True,
+    ) -> list[dict]:
+        """Write `df` — logical columns, plus `__rid` / `__rcv` lineage
+        on row-tracking tables — as new data files under
+        `_<kind>_<uuid>/` and return their add actions. `pv` is the
+        partitionValues of a one-partition frame of data columns;
+        `pv=None` writes a frame carrying EVERY column in hive layout
+        and decodes each file's partitionValues from its directory
+        (MERGE, whose rows may move partitions). Column-mapped tables
+        write physical names. Each file's footer is read once: 0-row
+        part files (a fully-deleted group) are dropped — stat-less
+        empty adds would only add scan tax — and the row count
+        allocates the file's baseRowId range on row-tracking tables.
+        Stats attach when the table carries them."""
+        lineage = [c for c in ("__rid", "__rcv") if c in df.columns]
+        part_by: list[str] = []
+        if pv is None:
+            part_by = ctx.part_cols
+            if ctx.mode != "none":
+                df = df.select(
+                    *[
+                        F.col(f.name)
+                        .cast(self._phys_type(f.dataType))
+                        .alias(self._phys_name(f))
+                        for f in ctx.schema.fields
+                    ],
+                    *lineage,
+                )
+                part_by = [
+                    self._phys_name(ctx.fields_by_name[c])
+                    for c in ctx.part_cols
+                ]
+        elif ctx.phys_sel is not None:
+            df = df.select(*ctx.phys_sel, *lineage)
+        if lineage:
+            df = df.withColumnsRenamed(
+                {
+                    c: m
+                    for c, m in (("__rid", ctx.mat_id), ("__rcv", ctx.mat_rcv))
+                    if c in lineage
+                }
+            )
+        out_dir = os.path.join(self.path, f"_{kind}_{uuid4().hex}")
+        w = df.write.mode("errorifexists")
+        if part_by:
+            w = w.partitionBy(*part_by)
+        w.parquet(out_dir)
+        files: list[tuple[str, int]] = []
+        for root, _dirs, names in os.walk(out_dir):
+            for f in names:
+                if not f.endswith(".parquet"):
+                    continue
+                full = os.path.join(root, f)
+                n = _parquet_num_rows(self.spark, full)
+                if n == 0:
+                    os.remove(full)
+                else:
+                    files.append((full, n))
+        files.sort()
+        stats_by = (
+            _per_file_stats(
+                self.spark.read.schema(ctx.write_schema).parquet(
+                    *[f for f, _n in files]
+                ),
+                ctx.stats_fields,
+            )
+            if ctx.carries_stats and files
+            else {}
+        )
+        adds = []
+        for f, n in files:
+            add = {
+                "path": quote(os.path.relpath(f, self.path)),
+                "partitionValues": (
+                    pv
+                    if pv is not None
+                    else _hive_partition_values(os.path.relpath(f, out_dir))
+                ),
+                "size": os.path.getsize(f),
+                "modificationTime": 0,
+                "dataChange": data_change,
+            }
+            if f in stats_by:
+                add["stats"] = json.dumps(stats_by[f])
+            if ctx.rt:
+                add["baseRowId"] = ctx.hwm + 1
+                add["defaultRowCommitVersion"] = ctx.v + 1
+                ctx.hwm += n
+            adds.append({"add": add})
+        return adds
+
+    @staticmethod
+    def _removes(keys, data_change: bool = True) -> list[dict]:
+        return [
+            {
+                "remove": {
+                    "path": k,
+                    "deletionTimestamp": 0,
+                    "dataChange": data_change,
+                }
+            }
+            for k in keys
+        ]
+
     @_retry_conflicts
     def delete_where(self, predicates: list) -> int:
         """DELETE WHERE (conjunctive (column, op, literal) predicates
@@ -3064,266 +3238,84 @@ class DeltaLogReader:
         carries them). Returns the committed version."""
         from . import skipping
 
-        v = self.latest_version()
-        meta, live = self._replay(v)
-        if self._live_has_dvs(live):
+        ctx = self._dml_context(
+            "delete_where", predicates, whole_file_removes=True
+        )
+        if self._live_has_dvs(ctx.live):
             # a table already carrying vectors is in merge-on-read
             # land: route to the DV path (identical logical result,
             # commit cost ∝ matched rows) instead of refusing —
             # callers shouldn't need to know the table's physical
             # state to spell DELETE (VERDICT r9 item 6)
             return self.delete_where_dv(predicates)
-        self._guard_writer_protocol(
-            meta, "delete_where", removes_data=True,
-            maintains_row_ids=True,  # survivors materialize id + rcv
-        )
-        schema = self._schema_from_meta(meta)
-        skipping.validate(predicates, [f.name for f in schema.fields])
-        part_cols = self._logical_part_cols(meta, schema)
-        fields_by_name = {f.name: f for f in schema.fields}
-        data_fields = [f for f in schema.fields if f.name not in part_cols]
-        mode = self._mapping_mode(meta)
-        file_schema, logical_sel = self._file_schema_and_logical(
-            data_fields, mode
-        )
-        phys_sel, write_schema, stats_fields = self._write_side(
-            data_fields, mode
-        )
-        pv_key = self._pv_key(fields_by_name, mode)
-        relabel = self._stats_relabel(data_fields, mode)
-        part_preds = [p for p in predicates if p[0] in part_cols]
-        data_preds = [p for p in predicates if p[0] not in part_cols]
-
-        def abspath(p: str) -> str:
-            p = unquote(p)
-            return p if p.startswith("/") else os.path.join(self.path, p)
-
-        carried: list[str] = []  # add paths untouched
-        removes: list[str] = []  # metadata-only deletes
-        rewrite: dict[str, dict] = {}  # path -> add, needs survivors
-        for key, a in live.items():
-            pv = a.get("partitionValues") or {}
-            part = {
-                c: self._py_partition_value(
-                    pv.get(pv_key(c)), fields_by_name[c].dataType
-                )
-                for c in part_cols
-            }
-            # partition conjuncts false for this file -> no row matches
-            if not all(
-                skipping._exact_may_match(part[c], op, lit)
-                for c, op, lit in part_preds
-            ):
-                carried.append(key)
-                continue
-            if not data_preds:
-                # predicate fully resolved by partition values: every
-                # row of this file matches -> metadata-only delete
-                removes.append(key)
-                continue
-            minv, maxv, nullc, rows = skipping.parse_delta_stats(
-                a.get("stats")
-            )
-            if not skipping.file_may_match(
-                data_preds, {}, relabel(minv), relabel(maxv),
-                relabel(nullc), rows,
-            ):
-                carried.append(key)  # provably no matching row
-            else:
-                rewrite[key] = a
-
+        removes, rewrite = ctx.removes, ctx.candidates
         if not removes and not rewrite:
-            return v  # provably nothing to delete: no empty commit
+            return ctx.v  # provably nothing to delete: no empty commit
 
-        carries_stats = any("stats" in a for a in live.values())
         cdc_actions: list[dict] = []
-        if self._cdf_enabled(meta):
+        if self._cdf_enabled(ctx.meta):
             # CDF: the deleted rows — whole files for metadata-only
             # removes, matching rows for rewrites. CDF turns the
             # metadata-only partition delete into a read+write of the
             # removed partitions: the documented cost of enabling it.
             ents = lambda ks: [  # noqa: E731
                 (
-                    abspath(live[k]["path"]),
-                    live[k].get("partitionValues") or {},
+                    self._abs(ctx.live[k]["path"]),
+                    ctx.live[k].get("partitionValues") or {},
                 )
                 for k in ks
             ]
             deleted = self._scan_with_parts(
-                ents(removes), data_fields, schema.fields, part_cols,
-                fields_by_name, mode,
+                ents(removes), ctx.data_fields, ctx.schema.fields,
+                ctx.part_cols, ctx.fields_by_name, ctx.mode,
             )
             hit = self._scan_with_parts(
-                ents(rewrite), data_fields, schema.fields, part_cols,
-                fields_by_name, mode,
+                ents(rewrite), ctx.data_fields, ctx.schema.fields,
+                ctx.part_cols, ctx.fields_by_name, ctx.mode,
             )
             if hit is not None:
-                hit = hit.filter(skipping.residual_filter(data_preds))
+                hit = hit.filter(skipping.residual_filter(ctx.data_preds))
                 deleted = (
                     hit if deleted is None else deleted.unionByName(hit)
                 )
             cdc_actions = self._stage_cdc(
                 deleted.withColumn("_change_type", F.lit("delete")),
-                part_cols, fields_by_name, mode,
+                ctx.part_cols, ctx.fields_by_name, ctx.mode,
             )
             if not cdc_actions:
                 # CDF just proved NO row matches (stats were merely
                 # inconclusive): publishing a rewrite commit without
                 # cdc actions would permanently break changes() — and
                 # there is nothing to delete anyway
-                return v
-        actions: list[dict] = [
-            {
-                "remove": {
-                    "path": p,
-                    "deletionTimestamp": 0,
-                    "dataChange": True,
-                }
-            }
-            for p in sorted(list(removes) + list(rewrite))
-        ]
+                return ctx.v
+        actions = self._removes(sorted(list(removes) + list(rewrite)))
         # ROW TRACKING (round 9): survivors of a COW delete keep their
-        # id + commit version via the materialized columns (coalesce of
-        # existing materialized values over baseRowId+position / the
-        # source add's default); the fresh files still get fresh
-        # baseRowId ranges, and whole-file removes retire ids without
-        # reissuing them (the watermark never decreases).
-        rt = self._row_tracking_on(meta)
-        rt_actions: list[dict] = []
-        mat_id = mat_rcv = None
-        rt_hwm = -1
-        rt_map_df = None
-        if rt:
-            mat_id, mat_rcv, rt_actions = self._rt_materialized_cols(meta)
-            rt_hwm = self._row_id_high_water_mark(live)
-            rt_map_df = self._rt_base_map_df(rewrite.values(), abspath)
-        # group rewrites by partition tuple; survivors of each group
-        # rewrite into fresh files whose add actions carry the group's
-        # partitionValues (the log, not the directory name, is
-        # authoritative per PROTOCOL.md)
-        groups: dict[tuple, list[str]] = {}
-        group_pv: dict[tuple, dict] = {}
-        for key, a in rewrite.items():
-            pv = a.get("partitionValues") or {}
-            k = tuple(pv.get(pv_key(c)) for c in part_cols)
-            groups.setdefault(k, []).append(abspath(a["path"]))
-            group_pv[k] = pv
+        # id + commit version via the materialized columns; the fresh
+        # files still get fresh baseRowId ranges, and whole-file
+        # removes retire ids without reissuing them.
+        self._rt_begin(ctx)
         # SQL DELETE removes rows where the predicate is TRUE; rows
         # where it evaluates NULL survive (NOT(NULL) is NULL and would
         # be filtered, so coalesce) — keeps table state consistent
         # with the CDF delete feed, which emits TRUE-matching rows
         not_matching = ~F.coalesce(
-            skipping.residual_filter(data_preds), F.lit(False)
+            skipping.residual_filter(ctx.data_preds), F.lit(False)
         )
-        norm_del = lambda c: F.regexp_replace(  # noqa: E731
-            c, "^file:/+", "/"
-        )
-        for k in sorted(
-            groups,
-            key=lambda kv: tuple((x is not None, x or "") for x in kv),
-        ):
-            read_schema = file_schema
-            if rt:
-                read_schema = T.StructType(
-                    list(file_schema.fields)
-                    + [
-                        T.StructField(mat_id, T.LongType(), True),
-                        T.StructField(mat_rcv, T.LongType(), True),
-                    ]
-                )
-            survivors = self.spark.read.schema(read_schema).parquet(
-                *sorted(groups[k])
+        # survivors of each partition group rewrite into fresh files
+        # whose add actions carry the group's partitionValues (the
+        # log, not the directory name, is authoritative per
+        # PROTOCOL.md). No coalesce: survivors keep the scan's
+        # parallelism, so a large group rewrites as many right-sized
+        # files in parallel (compaction is optimize()'s job)
+        for _k, adds in self._partition_groups(ctx, rewrite.values()):
+            survivors = self._scan_live_rows(
+                ctx, adds, lineage=ctx.rt
+            ).filter(not_matching)
+            actions += self._write_data_files(
+                ctx, survivors, "rewrite",
+                adds[-1].get("partitionValues") or {},
             )
-            if rt:
-                survivors = (
-                    survivors.select(
-                        *logical_sel,
-                        F.col(mat_id),
-                        F.col(mat_rcv),
-                        norm_del(F.col("_metadata.file_path")).alias(
-                            "__path"
-                        ),
-                        F.col("_metadata.row_index").alias("__pos"),
-                    )
-                    .join(F.broadcast(rt_map_df), "__path", "left")
-                    .withColumn(
-                        "__rid",
-                        F.coalesce(
-                            F.col(mat_id), F.col("__base") + F.col("__pos")
-                        ),
-                    )
-                    .withColumn(
-                        "__rcv",
-                        F.coalesce(F.col(mat_rcv), F.col("__dfrcv")),
-                    )
-                    .drop(
-                        mat_id, mat_rcv, "__path", "__pos", "__base",
-                        "__dfrcv",
-                    )
-                )
-            else:
-                survivors = survivors.select(*logical_sel)
-            survivors = survivors.filter(not_matching)
-            if phys_sel is not None:
-                survivors = survivors.select(
-                    *phys_sel,
-                    *([F.col("__rid"), F.col("__rcv")] if rt else []),
-                )
-            if rt:
-                survivors = survivors.withColumnRenamed(
-                    "__rid", mat_id
-                ).withColumnRenamed("__rcv", mat_rcv)
-            out_dir = os.path.join(
-                self.path, f"_rewrite_{uuid4().hex}"
-            )
-            # no coalesce: survivors keep the scan's parallelism, so a
-            # large partition group rewrites as many right-sized files
-            # in parallel (compaction is optimize()'s job, not DELETE's)
-            survivors.write.mode("errorifexists").parquet(out_dir)
-            # a fully-deleted group leaves 0-row part files: referencing
-            # them would be protocol-legal but pointless (and statless,
-            # so they would scan forever) — drop them via the parquet
-            # footer, a driver-side metadata read
-            import pyarrow.parquet as pq
-
-            new_files = []
-            for f in sorted(os.listdir(out_dir)):
-                full = os.path.join(out_dir, f)
-                if not f.endswith(".parquet"):
-                    continue
-                if _parquet_num_rows(self.spark, full) == 0:
-                    os.remove(full)
-                else:
-                    new_files.append(full)
-            stats_by = (
-                _per_file_stats(
-                    self.spark.read.schema(write_schema).parquet(*new_files),
-                    stats_fields,
-                )
-                if carries_stats and new_files
-                else {}
-            )
-            for f in new_files:
-                add = {
-                    "path": quote(os.path.relpath(f, self.path)),
-                    "partitionValues": group_pv[k],
-                    "size": os.path.getsize(f),
-                    "modificationTime": 0,
-                    "dataChange": True,
-                }
-                if f in stats_by:
-                    add["stats"] = json.dumps(stats_by[f])
-                if rt:
-                    n = _parquet_num_rows(self.spark, f)
-                    add["baseRowId"] = rt_hwm + 1
-                    add["defaultRowCommitVersion"] = v + 1
-                    rt_hwm += n
-                actions.append({"add": add})
-        if rt:
-            rt_actions.append(self._rt_domain_action(rt_hwm))
-        return self._publish(
-            self._next_version(), rt_actions + cdc_actions + actions
-        )
+        return self._dml_publish(ctx, cdc_actions + actions)
 
     @_retry_conflicts
     def delete_where_dv(self, predicates: list) -> int:
@@ -3349,134 +3341,44 @@ class DeltaLogReader:
         upgrades to {deletionVectors} on first use. optimize() later
         PURGES vectors (rewrites the file with tombstones applied),
         and vacuum reclaims .bin files exactly like data files — kept
-        while any retained snapshot references them. Returns the
-        committed version (the current one when provably or actually
-        nothing matches: no empty commit)."""
+        while any retained snapshot references them. Row ids survive
+        for free: a hit file re-adds with its original baseRowId /
+        defaultRowCommitVersion. Returns the committed version (the
+        current one when provably or actually nothing matches: no
+        empty commit)."""
         from . import skipping
 
-        v = self.latest_version()
-        meta, live = self._replay(v)
-        self._guard_writer_protocol(
-            meta, "delete_where_dv", removes_data=True,
-            # survivors keep their ids for free: the hit file re-adds
-            # with its original baseRowId/defaultRowCommitVersion (the
-            # {**a} re-add), and whole-file removes retire ids without
-            # reissuing them (the high-water mark never decreases)
-            maintains_row_ids=True,
+        ctx = self._dml_context(
+            "delete_where_dv", predicates, whole_file_removes=True
         )
-        schema = self._schema_from_meta(meta)
-        skipping.validate(predicates, [f.name for f in schema.fields])
-        part_cols = self._logical_part_cols(meta, schema)
-        fields_by_name = {f.name: f for f in schema.fields}
-        data_fields = [f for f in schema.fields if f.name not in part_cols]
-        mode = self._mapping_mode(meta)
-        file_schema, logical_sel = self._file_schema_and_logical(
-            data_fields, mode
-        )
-        pv_key = self._pv_key(fields_by_name, mode)
-        relabel = self._stats_relabel(data_fields, mode)
-        part_preds = [p for p in predicates if p[0] in part_cols]
-        data_preds = [p for p in predicates if p[0] not in part_cols]
-
-        def abspath(p: str) -> str:
-            p = unquote(p)
-            return p if p.startswith("/") else os.path.join(self.path, p)
-
-        removes: list[str] = []  # whole-file metadata-only deletes
-        candidates: dict[str, dict] = {}  # may contain matching rows
-        for key, a in live.items():
-            pv = a.get("partitionValues") or {}
-            part = {
-                c: self._py_partition_value(
-                    pv.get(pv_key(c)), fields_by_name[c].dataType
-                )
-                for c in part_cols
-            }
-            if not all(
-                skipping._exact_may_match(part[c], op, lit)
-                for c, op, lit in part_preds
-            ):
-                continue  # no row matches; the add simply stays live
-            if not data_preds:
-                removes.append(key)
-                continue
-            minv, maxv, nullc, rows = skipping.parse_delta_stats(
-                a.get("stats")
-            )
-            if skipping.file_may_match(
-                data_preds, {}, relabel(minv), relabel(maxv),
-                relabel(nullc), rows,
-            ):
-                candidates[key] = a
-
-        if not removes and not candidates:
-            return v
-
-        norm = lambda c: F.regexp_replace(c, "^file:/+", "/")  # noqa: E731
+        if not ctx.removes and not ctx.candidates:
+            return ctx.v
         new_by_path: dict[str, list[int]] = {}
-        if candidates:
-            scan = self.spark.read.schema(file_schema).parquet(
-                *sorted(abspath(a["path"]) for a in candidates.values())
-            ).select(
-                *logical_sel,
-                norm(F.col("_metadata.file_path")).alias("__path"),
-                F.col("_metadata.row_index").alias("__pos"),
-            )
+        if ctx.candidates:
             # DELETE removes rows where the predicate is TRUE; NULL
-            # evaluations survive (same contract as delete_where)
-            matched = scan.filter(
-                F.coalesce(
-                    skipping.residual_filter(data_preds), F.lit(False)
+            # evaluations survive (same contract as delete_where).
+            # The collect is the DV regime's contract: a vector IS a
+            # driver-serialized bitmap, bounded by matched rows
+            new_by_path = rowlevel.collect_positions(
+                self._scan_live_rows(
+                    ctx, ctx.candidates.values(), positions=True
+                ).filter(
+                    F.coalesce(
+                        skipping.residual_filter(ctx.data_preds),
+                        F.lit(False),
+                    )
                 )
-            ).select("__path", "__pos")
-            dv_rows = [
-                self._dv_descriptor(a, abspath)
-                for a in candidates.values()
-                if a.get("deletionVector")
-            ]
-            if dv_rows:
-                pos_df = self._dv_positions_df(dv_rows).select(
-                    norm(F.col("file_path")).alias("__del_path"),
-                    F.col("pos").alias("__del_pos"),
-                )
-                matched = matched.join(
-                    F.broadcast(pos_df),
-                    (F.col("__path") == F.col("__del_path"))
-                    & (F.col("__pos") == F.col("__del_pos")),
-                    "left_anti",
-                )
-            # the collect is the DV regime's contract: a vector IS a
-            # driver-serialized bitmap, bounded by matched rows — a
-            # delete touching most of the table belongs on the
-            # rewrite path (delete_where), not here
-            new_by_path = {
-                r["__path"]: [int(x) for x in r["pos"]]
-                for r in matched.groupBy("__path")
-                .agg(F.sort_array(F.collect_list("__pos")).alias("pos"))
-                .collect()
-            }
-
-        if not removes and not new_by_path:
-            return v  # stats were merely inconclusive: nothing matches
-
-        actions = self._dv_actions(candidates, new_by_path, abspath)
-        actions.extend(
-            {
-                "remove": {
-                    "path": p,
-                    "deletionTimestamp": 0,
-                    "dataChange": True,
-                }
-            }
-            for p in sorted(removes)
-        )
+            )
+        if not ctx.removes and not new_by_path:
+            return ctx.v  # stats were merely inconclusive: nothing matches
+        actions = self._dv_actions(ctx.candidates, new_by_path)
+        actions += self._removes(sorted(ctx.removes))
         return self._publish(self._next_version(), actions)
 
     def _dv_actions(
         self,
         candidates: dict[str, dict],
         new_by_path: dict[str, list[int]],
-        abspath,
     ) -> list[dict]:
         """Render a deletion-vector commit's actions: merge each hit
         file's new positions with its previous vector, serialize the
@@ -3524,12 +3426,12 @@ class DeltaLogReader:
                     }
                 }
             )
-        by_abs = {abspath(a["path"]): a for a in candidates.values()}
+        by_abs = {self._abs(a["path"]): a for a in candidates.values()}
         hits: list[tuple[dict, list[int]]] = []
         for ap in sorted(new_by_path):
             a = by_abs[ap]
             old = (
-                self._decode_dv_positions(a, abspath)
+                self._decode_dv_positions(a)
                 if a.get("deletionVector")
                 else []
             )
@@ -3586,219 +3488,59 @@ class DeltaLogReader:
         signed-delta maintenance."""
         from . import skipping
 
-        v = self.latest_version()
-        meta, live = self._replay(v)
-        self._guard_writer_protocol(
-            meta, "update_where_dv", removes_data=True,
-            # PRESERVED row tracking: survivor files keep their ids
-            # (DV re-add), and each updated image carries its OLD id
-            # in the materialized row-id column written below
-            maintains_row_ids=True,
-        )
-        schema = self._schema_from_meta(meta)
-        skipping.validate(predicates, [f.name for f in schema.fields])
-        part_cols = self._logical_part_cols(meta, schema)
-        fields_by_name = {f.name: f for f in schema.fields}
-        unknown = sorted(set(set_exprs) - set(fields_by_name))
-        if unknown:
-            raise ValueError(f"update_where_dv: unknown columns {unknown}")
-        bad = sorted(set(set_exprs) & set(part_cols))
-        if bad:
-            raise ValueError(
-                f"update_where_dv: partition columns cannot be "
-                f"assigned: {bad} (rows never move partitions on "
-                "UPDATE — that is MERGE's job)"
-            )
-        data_fields = [f for f in schema.fields if f.name not in part_cols]
-        mode = self._mapping_mode(meta)
-        file_schema, logical_sel = self._file_schema_and_logical(
-            data_fields, mode
-        )
-        phys_sel, write_schema, stats_fields = self._write_side(
-            data_fields, mode
-        )
-        pv_key = self._pv_key(fields_by_name, mode)
-        relabel = self._stats_relabel(data_fields, mode)
-        part_preds = [p for p in predicates if p[0] in part_cols]
-        data_preds = [p for p in predicates if p[0] not in part_cols]
-
-        def abspath(p: str) -> str:
-            p = unquote(p)
-            return p if p.startswith("/") else os.path.join(self.path, p)
-
-        candidates: dict[str, dict] = {}
-        for key, a in live.items():
-            pv = a.get("partitionValues") or {}
-            part = {
-                c: self._py_partition_value(
-                    pv.get(pv_key(c)), fields_by_name[c].dataType
-                )
-                for c in part_cols
-            }
-            if not all(
-                skipping._exact_may_match(part[c], op, lit)
-                for c, op, lit in part_preds
-            ):
-                continue
-            if data_preds:
-                minv, maxv, nullc, rows = skipping.parse_delta_stats(
-                    a.get("stats")
-                )
-                if not skipping.file_may_match(
-                    data_preds, {}, relabel(minv), relabel(maxv),
-                    relabel(nullc), rows,
-                ):
-                    continue
-            candidates[key] = a
-        if not candidates:
-            return v
-
-        norm = lambda c: F.regexp_replace(c, "^file:/+", "/")  # noqa: E731
+        ctx = self._dml_context("update_where_dv", predicates, set_exprs)
+        if not ctx.candidates:
+            return ctx.v
         matching = (
-            F.coalesce(skipping.residual_filter(data_preds), F.lit(False))
-            if data_preds
+            F.coalesce(skipping.residual_filter(ctx.data_preds), F.lit(False))
+            if ctx.data_preds
             else F.lit(True)
         )
-        dv_rows = [
-            self._dv_descriptor(a, abspath)
-            for a in candidates.values()
-            if a.get("deletionVector")
-        ]
-        carries_stats = any("stats" in a for a in live.values())
-
         # ROW TRACKING (round 9): a preserved UPDATE — each image row
-        # carries its OLD id via the materialized row-id column (the
-        # name is table config; first use assigns one and commits the
-        # metaData update atomically), the image FILE still gets a
-        # fresh baseRowId range (spec: every add carries one; the
-        # materialized values override on read), and the commit's
-        # defaultRowCommitVersion marks the rows as updated at v+1.
-        rt = self._row_tracking_on(meta)
-        rt_actions: list[dict] = []
-        mat_id: str | None = None
-        rt_hwm = -1
-        if rt:
-            mat_id, _mat_rcv, rt_actions = self._rt_materialized_cols(
-                meta, need_rcv=False
-            )
-            rt_base_df = self._rt_base_map_df(
-                candidates.values(), abspath
-            ).drop("__dfrcv")
-            rt_hwm = self._row_id_high_water_mark(live)
-
-        groups: dict[tuple, list[str]] = {}
-        group_pv: dict[tuple, dict] = {}
-        for a in candidates.values():
-            pv = a.get("partitionValues") or {}
-            k = tuple(pv.get(pv_key(c)) for c in part_cols)
-            groups.setdefault(k, []).append(abspath(a["path"]))
-            group_pv[k] = pv
-
+        # carries its OLD id via the materialized row-id column, the
+        # image FILE still gets a fresh baseRowId range (spec: every
+        # add carries one; the materialized values override on read),
+        # and the commit's defaultRowCommitVersion marks the rows as
+        # updated at v+1.
+        self._rt_begin(ctx, need_rcv=False)
+        cols = ctx.schema.fieldNames()
         new_by_path: dict[str, list[int]] = {}
         image_adds: list[dict] = []
-        cdf = self._cdf_enabled(meta)
+        cdf = self._cdf_enabled(ctx.meta)
         cdc_src: DataFrame | None = None
-        for k in sorted(
-            groups,
-            key=lambda kv: tuple((x is not None, x or "") for x in kv),
-        ):
-            scan_schema = file_schema
-            if rt:
-                # read any EXISTING materialized ids too (files that
-                # never materialized null-fill, falling back to
-                # baseRowId + position — the read path's exact rule)
-                scan_schema = T.StructType(
-                    list(file_schema.fields)
-                    + [T.StructField(mat_id, T.LongType(), True)]
-                )
-            matched = (
-                self.spark.read.schema(scan_schema)
-                .parquet(*sorted(groups[k]))
-                .select(
-                    *logical_sel,
-                    *([F.col(mat_id)] if rt else []),
-                    norm(F.col("_metadata.file_path")).alias("__path"),
-                    F.col("_metadata.row_index").alias("__pos"),
-                )
-                .filter(matching)
-            )
-            if rt:
-                matched = matched.join(
-                    F.broadcast(rt_base_df), "__path", "left"
-                ).withColumn(
-                    "__rid",
-                    F.coalesce(
-                        F.col(mat_id), F.col("__base") + F.col("__pos")
-                    ),
-                )
-            if dv_rows:
-                pos_df = self._dv_positions_df(dv_rows).select(
-                    norm(F.col("file_path")).alias("__del_path"),
-                    F.col("pos").alias("__del_pos"),
-                )
-                matched = matched.join(
-                    F.broadcast(pos_df),
-                    (F.col("__path") == F.col("__del_path"))
-                    & (F.col("__pos") == F.col("__del_pos")),
-                    "left_anti",
-                )
-            got = {
-                r["__path"]: [int(x) for x in r["pos"]]
-                for r in matched.groupBy("__path")
-                .agg(F.sort_array(F.collect_list("__pos")).alias("pos"))
-                .collect()
-            }
+        for k, adds in self._partition_groups(ctx, ctx.candidates.values()):
+            matched = self._scan_live_rows(
+                ctx, adds, lineage=ctx.rt, positions=True
+            ).filter(matching)
+            got = rowlevel.collect_positions(matched)
             if not got:
                 continue  # stats were inconclusive for this group
             new_by_path.update(got)
-            # updated images: partition columns attach as typed
-            # literals so RHS expressions may reference them, then
-            # ONE projection over the OLD rows applies every
-            # assignment (update_where's exact semantics) and the
-            # write keeps only the data columns
-            imaged = matched
-            for c, raw in zip(part_cols, k):
-                dt = fields_by_name[c].dataType
-                imaged = imaged.withColumn(
-                    c,
-                    F.lit(raw).cast(dt)
-                    if raw is not None
-                    else F.lit(None).cast(dt),
-                )
-            # full-row projection first (partition columns still
-            # attached) so constraint expressions may reference them;
-            # the write then keeps only the data columns
-            old_full = imaged
-            imaged = imaged.select(
-                *[
-                    F.expr(set_exprs[f.name]).cast(f.dataType).alias(f.name)
-                    if f.name in set_exprs
-                    else F.col(f.name)
-                    for f in schema.fields
-                ],
-                *([F.col("__rid")] if rt else []),
+            # partition columns attach as typed literals so RHS
+            # expressions (and constraints) may reference them, then
+            # ONE projection over the OLD rows applies every assignment
+            old_full = _with_partition_literals(
+                matched, ctx.part_cols, k, ctx.fields_by_name
+            )
+            imaged = old_full.select(
+                *rowlevel.assign(set_exprs, ctx.schema.fields),
+                *(["__rid"] if ctx.rt else []),
             )
             # updated images are the commit's NEW rows: enforce the
             # table's constraints before this group stages anything
             self._enforce_write_constraints(
-                meta, imaged.drop("__rid"), "update_where_dv"
+                ctx.meta, imaged.select(*cols), "update_where_dv"
             )
             if cdf:
-                # CDF tagging (ADVICE r10): the matched OLD rows are
-                # update_preimages, their assigned images
-                # update_postimages — staged as cdc files so changes()
-                # renders this DV commit exactly like a rewriting
-                # update_where's (change types independent of the
-                # table's physical state)
+                # the matched OLD rows are update_preimages, their
+                # images update_postimages — staged as cdc files so
+                # changes() renders this commit exactly like a
+                # rewriting update_where's (ADVICE r10)
                 grp_cdc = (
-                    old_full.select(
-                        *[F.col(f.name) for f in schema.fields]
-                    )
+                    old_full.select(*cols)
                     .withColumn("_change_type", F.lit("update_preimage"))
                     .unionByName(
-                        imaged.select(
-                            *[F.col(f.name) for f in schema.fields]
-                        ).withColumn(
+                        imaged.select(*cols).withColumn(
                             "_change_type", F.lit("update_postimage")
                         )
                     )
@@ -3808,70 +3550,26 @@ class DeltaLogReader:
                     if cdc_src is None
                     else cdc_src.unionByName(grp_cdc)
                 )
-            imaged = imaged.select(
-                *[f.name for f in data_fields],
-                *([F.col("__rid").alias(mat_id)] if rt else []),
-            )
             # matched counts are known (the positions collect above):
             # size the append at ~1M rows/file instead of inheriting
             # the candidate scan's partitioning for a few rows
             n_rows = sum(len(ps) for ps in got.values())
-            imaged = imaged.coalesce(max(1, -(-n_rows // 1_000_000)))
-            if phys_sel is not None:
-                imaged = imaged.select(
-                    *phys_sel, *([F.col(mat_id)] if rt else [])
-                )
-            out_dir = os.path.join(self.path, f"_update_{uuid4().hex}")
-            imaged.write.mode("errorifexists").parquet(out_dir)
-            import pyarrow.parquet as _pq
-
-            new_files = []
-            for f in sorted(os.listdir(out_dir)):
-                full = os.path.join(out_dir, f)
-                if not f.endswith(".parquet"):
-                    continue
-                if _parquet_num_rows(self.spark, full) == 0:
-                    os.remove(full)
-                else:
-                    new_files.append(full)
-            stats_by = (
-                _per_file_stats(
-                    self.spark.read.schema(write_schema).parquet(*new_files),
-                    stats_fields,
-                )
-                if carries_stats and new_files
-                else {}
+            imaged = imaged.select(
+                *[f.name for f in ctx.data_fields],
+                *(["__rid"] if ctx.rt else []),
+            ).coalesce(max(1, -(-n_rows // 1_000_000)))
+            image_adds += self._write_data_files(
+                ctx, imaged, "update", adds[-1].get("partitionValues") or {}
             )
-            for f in new_files:
-                add = {
-                    "path": quote(os.path.relpath(f, self.path)),
-                    "partitionValues": group_pv[k],
-                    "size": os.path.getsize(f),
-                    "modificationTime": 0,
-                    "dataChange": True,
-                }
-                if f in stats_by:
-                    add["stats"] = json.dumps(stats_by[f])
-                if rt:
-                    n = _parquet_num_rows(self.spark, f)
-                    add["baseRowId"] = rt_hwm + 1
-                    add["defaultRowCommitVersion"] = v + 1
-                    rt_hwm += n
-                image_adds.append({"add": add})
         if not new_by_path:
-            return v  # provably or actually no matching row
+            return ctx.v  # provably or actually no matching row
         cdc_actions: list[dict] = []
-        if cdf and cdc_src is not None:
+        if cdc_src is not None:
             cdc_actions = self._stage_cdc(
-                cdc_src, part_cols, fields_by_name, mode
+                cdc_src, ctx.part_cols, ctx.fields_by_name, ctx.mode
             )
-        if rt:
-            rt_actions.append(self._rt_domain_action(rt_hwm))
-        actions = self._dv_actions(candidates, new_by_path, abspath)
-        return self._publish(
-            self._next_version(),
-            rt_actions + cdc_actions + actions + image_adds,
-        )
+        actions = self._dv_actions(ctx.candidates, new_by_path)
+        return self._dml_publish(ctx, cdc_actions + actions + image_adds)
 
     @_retry_conflicts
     def update_where(
@@ -3895,290 +3593,75 @@ class DeltaLogReader:
         no row matches: no empty commit)."""
         from . import skipping
 
-        v = self.latest_version()
-        meta, live = self._replay(v)
-        if self._live_has_dvs(live):
+        ctx = self._dml_context("update_where", predicates, set_exprs)
+        if self._live_has_dvs(ctx.live):
             # same auto-route as delete_where: merge-on-read UPDATE on
             # a table already carrying vectors (VERDICT r9 item 6)
             return self.update_where_dv(predicates, set_exprs)
-        self._guard_writer_protocol(
-            meta, "update_where", removes_data=True,
-            # preserved update: every row keeps its id; matched rows'
-            # commit versions bump via the new add's default
-            maintains_row_ids=True,
-        )
-        schema = self._schema_from_meta(meta)
-        skipping.validate(predicates, [f.name for f in schema.fields])
-        part_cols = self._logical_part_cols(meta, schema)
-        bad = sorted(set(set_exprs) & set(part_cols))
-        if bad:
-            raise ValueError(
-                f"update_where cannot assign partition columns: {bad}"
-            )
-        fields_by_name = {f.name: f for f in schema.fields}
-        unknown = sorted(set(set_exprs) - set(fields_by_name))
-        if unknown:
-            raise ValueError(f"update_where: unknown columns {unknown}")
-        data_fields = [f for f in schema.fields if f.name not in part_cols]
-        mode = self._mapping_mode(meta)
-        file_schema, logical_sel = self._file_schema_and_logical(
-            data_fields, mode
-        )
-        phys_sel, write_schema, stats_fields = self._write_side(
-            data_fields, mode
-        )
-        pv_key = self._pv_key(fields_by_name, mode)
-        relabel = self._stats_relabel(data_fields, mode)
-        part_preds = [p for p in predicates if p[0] in part_cols]
-        data_preds = [p for p in predicates if p[0] not in part_cols]
-
-        def abspath(p: str) -> str:
-            p = unquote(p)
-            return p if p.startswith("/") else os.path.join(self.path, p)
-
-        rewrite: dict[str, dict] = {}
-        for key, a in live.items():
-            pv = a.get("partitionValues") or {}
-            part = {
-                c: self._py_partition_value(
-                    pv.get(pv_key(c)), fields_by_name[c].dataType
-                )
-                for c in part_cols
-            }
-            if not all(
-                skipping._exact_may_match(part[c], op, lit)
-                for c, op, lit in part_preds
-            ):
-                continue  # carried: partition conjunct false
-            if data_preds:
-                minv, maxv, nullc, rows = skipping.parse_delta_stats(
-                    a.get("stats")
-                )
-                if not skipping.file_may_match(
-                    data_preds, {}, relabel(minv), relabel(maxv),
-                    relabel(nullc), rows,
-                ):
-                    continue  # carried: stats prove no matching row
-            rewrite[key] = a
+        rewrite = ctx.candidates
         if not rewrite:
-            return v
-
-        carries_stats = any("stats" in a for a in live.values())
-        actions: list[dict] = [
-            {
-                "remove": {
-                    "path": p,
-                    "deletionTimestamp": 0,
-                    "dataChange": True,
-                }
-            }
-            for p in sorted(rewrite)
-        ]
-        matching = skipping.residual_filter(data_preds)
-        if self._write_constraints(meta):
-            # validate the post-assignment rows BEFORE any rewrite
-            # stages to disk: one scan of the hit files, matching
-            # rows only, every assignment applied as in the rewrite
-            pre_v = self._scan_with_parts(
-                [
-                    (abspath(a["path"]), a.get("partitionValues") or {})
-                    for a in rewrite.values()
-                ],
-                data_fields, schema.fields, part_cols, fields_by_name,
-                mode,
-            ).filter(matching)
-            post_v = pre_v.select(
-                *[
-                    F.expr(set_exprs[f.name])
-                    .cast(f.dataType)
-                    .alias(f.name)
-                    if f.name in set_exprs
-                    else F.col(f.name)
-                    for f in schema.fields
-                ]
-            )
-            self._enforce_write_constraints(meta, post_v, "update_where")
-        cdc_actions: list[dict] = []
-        if self._cdf_enabled(meta):
+            return ctx.v
+        actions = self._removes(sorted(rewrite))
+        matching = skipping.residual_filter(ctx.data_preds)
+        cdf = self._cdf_enabled(ctx.meta)
+        if cdf or self._write_constraints(ctx.meta):
+            # the matching rows before and after every assignment
+            # (ONE projection: each RHS evaluates against the OLD row,
+            # SQL UPDATE semantics, never a co-assigned column)
             pre = self._scan_with_parts(
                 [
-                    (abspath(a["path"]), a.get("partitionValues") or {})
+                    (self._abs(a["path"]), a.get("partitionValues") or {})
                     for a in rewrite.values()
                 ],
-                data_fields, schema.fields, part_cols, fields_by_name,
-                mode,
+                ctx.data_fields, ctx.schema.fields, ctx.part_cols,
+                ctx.fields_by_name, ctx.mode,
             ).filter(matching)
-            # ONE projection: every RHS evaluates against the OLD row
-            # (SQL UPDATE semantics), never a co-assigned column
-            post = pre.select(
-                *[
-                    F.expr(set_exprs[f.name])
-                    .cast(f.dataType)
-                    .alias(f.name)
-                    if f.name in set_exprs
-                    else F.col(f.name)
-                    for f in schema.fields
-                ]
-            )
+            post = pre.select(*rowlevel.assign(set_exprs, ctx.schema.fields))
+            # validate the post-assignment rows BEFORE any rewrite
+            # stages to disk
+            self._enforce_write_constraints(ctx.meta, post, "update_where")
+        cdc_actions: list[dict] = []
+        if cdf:
             cdc = pre.withColumn(
                 "_change_type", F.lit("update_preimage")
             ).unionByName(
-                post.withColumn(
-                    "_change_type", F.lit("update_postimage")
-                )
+                post.withColumn("_change_type", F.lit("update_postimage"))
             )
             cdc_actions = self._stage_cdc(
-                cdc, part_cols, fields_by_name, mode
+                cdc, ctx.part_cols, ctx.fields_by_name, ctx.mode
             )
             if not cdc_actions:
                 # CDF proved no row matches: skip the no-op rewrite
                 # (a cdc-less rewrite commit would break changes())
-                return v
+                return ctx.v
         # ROW TRACKING (round 9): a COW UPDATE is PRESERVED — every
         # rewritten row keeps its id (materialized); rows the
         # predicate matched get a NULL materialized commit version so
         # they fall back to the new add's default (the update's
         # version), untouched rows materialize their old one.
-        rt = self._row_tracking_on(meta)
-        rt_actions: list[dict] = []
-        mat_id = mat_rcv = None
-        rt_hwm = -1
-        rt_map_df = None
-        if rt:
-            mat_id, mat_rcv, rt_actions = self._rt_materialized_cols(meta)
-            rt_hwm = self._row_id_high_water_mark(live)
-            rt_map_df = self._rt_base_map_df(rewrite.values(), abspath)
-        norm_upd = lambda c: F.regexp_replace(  # noqa: E731
-            c, "^file:/+", "/"
-        )
-        groups: dict[tuple, list[str]] = {}
-        group_pv: dict[tuple, dict] = {}
-        for key, a in rewrite.items():
-            pv = a.get("partitionValues") or {}
-            k = tuple(pv.get(pv_key(c)) for c in part_cols)
-            groups.setdefault(k, []).append(abspath(a["path"]))
-            group_pv[k] = pv
-        for k in sorted(
-            groups,
-            key=lambda kv: tuple((x is not None, x or "") for x in kv),
-        ):
-            # ONE projection (not chained withColumn): every RHS
-            # evaluates against the OLD row, SQL UPDATE semantics.
-            # Partition columns attach as typed literals so RHS may
-            # reference them; the projection then drops them.
-            read_schema = file_schema
-            if rt:
-                read_schema = T.StructType(
-                    list(file_schema.fields)
-                    + [
-                        T.StructField(mat_id, T.LongType(), True),
-                        T.StructField(mat_rcv, T.LongType(), True),
-                    ]
-                )
-            scan = self.spark.read.schema(read_schema).parquet(
-                *sorted(groups[k])
-            )
-            if rt:
-                scan = (
-                    scan.select(
-                        *logical_sel,
-                        F.col(mat_id),
-                        F.col(mat_rcv),
-                        norm_upd(F.col("_metadata.file_path")).alias(
-                            "__path"
-                        ),
-                        F.col("_metadata.row_index").alias("__pos"),
-                    )
-                    .join(F.broadcast(rt_map_df), "__path", "left")
-                    .withColumn(
-                        "__rid",
-                        F.coalesce(
-                            F.col(mat_id), F.col("__base") + F.col("__pos")
-                        ),
-                    )
-                    .withColumn(
-                        "__rcv",
-                        F.when(
-                            F.coalesce(matching, F.lit(False)),
-                            F.lit(None).cast("long"),
-                        ).otherwise(
-                            F.coalesce(F.col(mat_rcv), F.col("__dfrcv"))
-                        ),
-                    )
-                    .drop(
-                        mat_id, mat_rcv, "__path", "__pos", "__base",
-                        "__dfrcv",
-                    )
-                )
-            else:
-                scan = scan.select(*logical_sel)
-            for c, raw in zip(part_cols, k):
-                dt = fields_by_name[c].dataType
+        self._rt_begin(ctx)
+        for k, adds in self._partition_groups(ctx, rewrite.values()):
+            scan = self._scan_live_rows(ctx, adds, lineage=ctx.rt)
+            if ctx.rt:
                 scan = scan.withColumn(
-                    c,
-                    F.lit(raw).cast(dt)
-                    if raw is not None
-                    else F.lit(None).cast(dt),
-                )
-            updated = scan.select(
-                *[
+                    "__rcv",
                     F.when(
-                        matching,
-                        F.expr(set_exprs[f.name]).cast(f.dataType),
-                    )
-                    .otherwise(F.col(f.name))
-                    .alias(f.name)
-                    if f.name in set_exprs
-                    else F.col(f.name)
-                    for f in data_fields
-                ],
-                *([F.col("__rid"), F.col("__rcv")] if rt else []),
-            )
-            if phys_sel is not None:
-                updated = updated.select(
-                    *phys_sel,
-                    *([F.col("__rid"), F.col("__rcv")] if rt else []),
+                        F.coalesce(matching, F.lit(False)),
+                        F.lit(None).cast("long"),
+                    ).otherwise(F.col("__rcv")),
                 )
-            if rt:
-                updated = updated.withColumnRenamed(
-                    "__rid", mat_id
-                ).withColumnRenamed("__rcv", mat_rcv)
-            out_dir = os.path.join(self.path, f"_update_{uuid4().hex}")
-            updated.write.mode("errorifexists").parquet(out_dir)
-            new_files = sorted(
-                os.path.join(out_dir, f)
-                for f in os.listdir(out_dir)
-                if f.endswith(".parquet")
+            # partition columns attach as typed literals so RHS may
+            # reference them; the projection then drops them
+            updated = _with_partition_literals(
+                scan, ctx.part_cols, k, ctx.fields_by_name
+            ).select(
+                *rowlevel.assign(set_exprs, ctx.data_fields, when=matching),
+                *(["__rid", "__rcv"] if ctx.rt else []),
             )
-            stats_by = (
-                _per_file_stats(
-                    self.spark.read.schema(write_schema).parquet(*new_files),
-                    stats_fields,
-                )
-                if carries_stats and new_files
-                else {}
+            actions += self._write_data_files(
+                ctx, updated, "update", adds[-1].get("partitionValues") or {}
             )
-            for f in new_files:
-                add = {
-                    "path": quote(os.path.relpath(f, self.path)),
-                    "partitionValues": group_pv[k],
-                    "size": os.path.getsize(f),
-                    "modificationTime": 0,
-                    "dataChange": True,
-                }
-                if f in stats_by:
-                    add["stats"] = json.dumps(stats_by[f])
-                if rt:
-                    n = _parquet_num_rows(self.spark, f)
-                    add["baseRowId"] = rt_hwm + 1
-                    add["defaultRowCommitVersion"] = v + 1
-                    rt_hwm += n
-                actions.append({"add": add})
-        if rt:
-            rt_actions.append(self._rt_domain_action(rt_hwm))
-        return self._publish(
-            self._next_version(), rt_actions + cdc_actions + actions
-        )
+        return self._dml_publish(ctx, cdc_actions + actions)
 
     @_retry_conflicts
     def merge(self, source: DataFrame, key: str) -> int:
@@ -4210,15 +3693,8 @@ class DeltaLogReader:
         (remove + plain add)."""
         from . import skipping
 
-        v = self.latest_version()
-        meta, live = self._replay(v)
-        self._guard_writer_protocol(
-            meta, "merge", removes_data=True,
-            # round 9: survivors and matched rows keep their ids via
-            # the materialized columns; inserts allocate fresh ranges
-            maintains_row_ids=True,
-        )
-        schema = self._schema_from_meta(meta)
+        ctx = self._dml_context("merge")
+        live, part_cols, schema = ctx.live, ctx.part_cols, ctx.schema
         if key not in schema.fieldNames():
             raise ValueError(f"merge key {key!r} not in table schema")
         missing = set(schema.fieldNames()) - set(source.columns)
@@ -4228,62 +3704,7 @@ class DeltaLogReader:
         # every matched update and insert is a source row — one
         # validation pass over the batch enforces the table's CHECK
         # constraints / invariants before anything writes
-        self._enforce_write_constraints(meta, source, "merge")
-        part_cols = self._logical_part_cols(meta, schema)
-        fields_by_name = {f.name: f for f in schema.fields}
-        data_fields = [f for f in schema.fields if f.name not in part_cols]
-        mode = self._mapping_mode(meta)
-        file_schema, logical_sel = self._file_schema_and_logical(
-            data_fields, mode
-        )
-        _phys_sel, write_schema, stats_fields = self._write_side(
-            data_fields, mode
-        )
-        pv_key = self._pv_key(fields_by_name, mode)
-        relabel = self._stats_relabel(data_fields, mode)
-        # the merged output writes EVERY column (data via the files,
-        # partition via the hive dirs) physically named under mapping
-        if mode != "none":
-            all_phys_sel = [
-                F.col(f.name)
-                .cast(self._phys_type(f.dataType))
-                .alias(self._phys_name(f))
-                for f in schema.fields
-            ]
-            write_part_cols = [
-                self._phys_name(fields_by_name[c]) for c in part_cols
-            ]
-        else:
-            all_phys_sel = None
-            write_part_cols = part_cols
-
-        def abspath(p: str) -> str:
-            p = unquote(p)
-            return p if p.startswith("/") else os.path.join(self.path, p)
-
-        norm = lambda c: F.regexp_replace(c, "^file:/+", "/")  # noqa: E731
-
-        def drop_dv(df: DataFrame, live_keys) -> DataFrame:
-            """Anti-join the given live files' tombstoned positions
-            off a scan frame carrying __fp / __pos — every merge-side
-            read of a vectored file goes through this."""
-            rows = [
-                self._dv_descriptor(live[k], abspath)
-                for k in live_keys
-                if live[k].get("deletionVector")
-            ]
-            if not rows:
-                return df
-            pos_df = self._dv_positions_df(rows).select(
-                norm(F.col("file_path")).alias("__del_path"),
-                F.col("pos").alias("__del_pos"),
-            )
-            return df.join(
-                F.broadcast(pos_df),
-                (norm(F.col("__fp")) == F.col("__del_path"))
-                & (F.col("__pos") == F.col("__del_pos")),
-                "left_anti",
-            )
+        self._enforce_write_constraints(ctx.meta, source, "merge")
 
         keys = source.select(key).distinct()
         hit_keys: set[str] = set()
@@ -4296,30 +3717,21 @@ class DeltaLogReader:
             # metadata the replay already holds, O(files)) against
             # the source keys DISTRIBUTED — the only collect is then
             # the hit-file list, which the rewrite materializes anyway.
-            kt = fields_by_name[key].dataType
+            kt = ctx.fields_by_name[key].dataType
+            pv_of = {
+                k: self._py_partition_value(
+                    (a.get("partitionValues") or {}).get(ctx.pv_key(key)), kt
+                )
+                for k, a in live.items()
+            }
             sample = keys.limit(_MERGE_KEY_COLLECT_CAP + 1).collect()
             if len(sample) <= _MERGE_KEY_COLLECT_CAP:
                 key_vals = {r[0] for r in sample}
-                for k, a in live.items():
-                    pv = (a.get("partitionValues") or {}).get(pv_key(key))
-                    if self._py_partition_value(pv, kt) in key_vals:
-                        hit_keys.add(k)
+                hit_keys = {k for k, val in pv_of.items() if val in key_vals}
             else:
-                pv_rows = [
-                    (
-                        k,
-                        self._py_partition_value(
-                            (a.get("partitionValues") or {}).get(
-                                pv_key(key)
-                            ),
-                            kt,
-                        ),
-                    )
-                    for k, a in live.items()
-                ]
                 pv_df = local_frame(
                     self.spark,
-                    pv_rows,
+                    list(pv_of.items()),
                     T.StructType(
                         [
                             T.StructField("__live_key", T.StringType()),
@@ -4327,16 +3739,14 @@ class DeltaLogReader:
                         ]
                     ),
                 )
-                hit_rows = (
-                    pv_df.join(
-                        keys,
-                        pv_df[key].eqNullSafe(keys[key]),
-                        "left_semi",
+                hit_keys = {
+                    r["__live_key"]
+                    for r in pv_df.join(
+                        keys, pv_df[key].eqNullSafe(keys[key]), "left_semi"
                     )
                     .select("__live_key")
                     .collect()
-                )
-                hit_keys.update(r["__live_key"] for r in hit_rows)
+                }
         else:
             # stats prune to candidates, then exact semi-join check
             row = keys.agg(
@@ -4348,6 +3758,7 @@ class DeltaLogReader:
                 if mn is not None
                 else []
             )
+            relabel = self._stats_relabel(ctx.data_fields, ctx.mode)
             cands: dict[str, dict] = {}
             for k, a in live.items():
                 minv, maxv, nullc, rows = skipping.parse_delta_stats(
@@ -4359,28 +3770,16 @@ class DeltaLogReader:
                 ):
                     cands[k] = a
             if cands:
-                by_abs = {abspath(a["path"]): k for k, a in cands.items()}
+                by_abs = {self._abs(a["path"]): k for k, a in cands.items()}
                 hits = (
-                    drop_dv(
-                        self.spark.read.schema(file_schema)
-                        .parquet(*sorted(by_abs))
-                        .select(
-                            *logical_sel,
-                            F.col("_metadata.file_path").alias("__fp"),
-                            F.col("_metadata.row_index").alias("__pos"),
-                        )
-                        .select("__fp", "__pos", key),
-                        cands,
-                    )
+                    self._scan_live_rows(ctx, cands.values(), positions=True)
+                    .select("__path", key)
                     .join(F.broadcast(keys), key, "left_semi")
-                    .select("__fp")
+                    .select("__path")
                     .distinct()
                     .collect()
                 )
-                for r in hits:
-                    hit_keys.add(by_abs[r["__fp"].removeprefix("file:")])
-
-        carries_stats = any("stats" in a for a in live.values())
+                hit_keys = {by_abs[r["__path"]] for r in hits}
 
         # ROW TRACKING (round 9): the merge rewrite is id-preserving —
         # survivors keep id + commit version (materialized), matched
@@ -4389,86 +3788,45 @@ class DeltaLogReader:
         # default), inserts get fresh base+position ids. Multiple old
         # rows sharing a matched key collapse to one source row, which
         # inherits the smallest of their ids (deterministic).
-        rt = self._row_tracking_on(meta)
-        rt_actions: list[dict] = []
-        mat_id = mat_rcv = None
-        rt_hwm = -1
-        rt_map_df = None
-        if rt:
-            mat_id, mat_rcv, rt_actions = self._rt_materialized_cols(meta)
-            rt_hwm = self._row_id_high_water_mark(live)
-            rt_map_df = self._rt_base_map_df(live.values(), abspath)
+        self._rt_begin(ctx)
 
         def hit_scan() -> DataFrame | None:
             """Hit files as LOGICAL rows: vectors applied, partition
             columns attached (typed, via a tiny path->values
-            broadcast), __fp retained for callers that still need the
-            provenance (+ __rid/__rcv lineage on rowTracking tables).
+            broadcast), + __rid/__rcv lineage on rowTracking tables.
             None when there are no hit files."""
             if not hit_keys:
                 return None
-            by_abs_h = {abspath(live[k]["path"]): k for k in hit_keys}
-            read_schema = file_schema
-            if rt:
-                read_schema = T.StructType(
-                    list(file_schema.fields)
-                    + [
-                        T.StructField(mat_id, T.LongType(), True),
-                        T.StructField(mat_rcv, T.LongType(), True),
-                    ]
-                )
-            df = drop_dv(
-                self.spark.read.schema(read_schema)
-                .parquet(*sorted(by_abs_h))
-                .select(
-                    *logical_sel,
-                    *([F.col(mat_id), F.col(mat_rcv)] if rt else []),
-                    F.col("_metadata.file_path").alias("__fp"),
-                    F.col("_metadata.row_index").alias("__pos"),
-                ),
-                hit_keys,
+            hit_adds = [live[k] for k in hit_keys]
+            df = self._scan_live_rows(
+                ctx, hit_adds, lineage=ctx.rt, positions=bool(part_cols)
             )
-            if rt:
-                df = (
-                    df.withColumn("__path", norm(F.col("__fp")))
-                    .join(F.broadcast(rt_map_df), "__path", "left")
-                    .withColumn(
-                        "__rid",
-                        F.coalesce(
-                            F.col(mat_id), F.col("__base") + F.col("__pos")
-                        ),
-                    )
-                    .withColumn(
-                        "__rcv",
-                        F.coalesce(F.col(mat_rcv), F.col("__dfrcv")),
-                    )
-                    .drop("__path", "__base", "__dfrcv", mat_id, mat_rcv)
-                )
-            df = df.drop("__pos")
             if part_cols:
-                pv_rows = []
-                for p, k in by_abs_h.items():
-                    pv = live[k].get("partitionValues") or {}
-                    pv_rows.append(
-                        (f"file:{p}",)
-                        + tuple(
-                            self._py_partition_value(
-                                pv.get(pv_key(c)),
-                                fields_by_name[c].dataType,
-                            )
-                            for c in part_cols
+                pv_rows = [
+                    (self._abs(a["path"]),)
+                    + tuple(
+                        self._py_partition_value(
+                            (a.get("partitionValues") or {}).get(
+                                ctx.pv_key(c)
+                            ),
+                            ctx.fields_by_name[c].dataType,
                         )
+                        for c in part_cols
                     )
+                    for a in hit_adds
+                ]
                 pv_schema = T.StructType(
-                    [T.StructField("__fp", T.StringType())]
-                    + [fields_by_name[c] for c in part_cols]
+                    [T.StructField("__path", T.StringType())]
+                    + [ctx.fields_by_name[c] for c in part_cols]
                 )
                 pv_df = local_frame(self.spark, pv_rows, pv_schema)
-                df = df.join(F.broadcast(pv_df), "__fp")
+                df = df.join(F.broadcast(pv_df), "__path").drop(
+                    "__path", "__pos"
+                )
             return df
 
         cdc_actions: list[dict] = []
-        if self._cdf_enabled(meta):
+        if self._cdf_enabled(ctx.meta):
             # CDF: matched old rows are update_preimages, their source
             # rows update_postimages, unmatched source rows inserts
             pre = hit_scan()
@@ -4506,121 +3864,46 @@ class DeltaLogReader:
             else:
                 cdc = source.withColumn("_change_type", F.lit("insert"))
             cdc_actions = self._stage_cdc(
-                cdc, part_cols, fields_by_name, mode
+                cdc, part_cols, ctx.fields_by_name, ctx.mode
             )
-        rt_cols = ["__rid", "__rcv"] if rt else []
-        merged_parts: list[DataFrame] = []
+        rt_cols = ["__rid", "__rcv"] if ctx.rt else []
         # partition-column key: a hit file's EVERY row carries a matched
         # key, so hit files have no survivors — pure metadata delete
-        src = source
+        merged = source
         if hit_keys and key not in part_cols:
             hs = hit_scan()
-            survivors = hs.join(F.broadcast(keys), key, "left_anti")
-            merged_parts.append(
-                survivors.select(*schema.fieldNames(), *rt_cols)
-            )
-            if rt:
+            if ctx.rt:
                 # matched source rows inherit the old row's id
                 matched_ids = (
                     hs.join(F.broadcast(keys), key, "left_semi")
                     .groupBy(key)
                     .agg(F.min("__rid").alias("__rid"))
                 )
-                src = (
+                merged = (
                     source.join(F.broadcast(matched_ids), key, "left")
                     .withColumn("__rcv", F.lit(None).cast("long"))
                     .select(*schema.fieldNames(), *rt_cols)
                 )
-        elif rt:
+            survivors = hs.join(F.broadcast(keys), key, "left_anti")
+            merged = survivors.select(
+                *schema.fieldNames(), *rt_cols
+            ).unionByName(merged)
+        elif ctx.rt:
             # whole-group replace (partition key) or no hits: every
             # source row is an insert — fresh ids from the watermark
-            src = source.withColumns(
+            merged = source.withColumns(
                 {
                     "__rid": F.lit(None).cast("long"),
                     "__rcv": F.lit(None).cast("long"),
                 }
             )
-        merged_parts.append(src)
-        merged = merged_parts[0]
-        for p in merged_parts[1:]:
-            merged = merged.unionByName(p)
-
-        if all_phys_sel is not None:
-            merged = merged.select(
-                *all_phys_sel, *[F.col(c) for c in rt_cols]
-            )
-        if rt:
-            merged = merged.withColumnRenamed(
-                "__rid", mat_id
-            ).withColumnRenamed("__rcv", mat_rcv)
-        out_dir = os.path.join(self.path, f"_merge_{uuid4().hex}")
-        w = merged.write.mode("errorifexists")
-        if write_part_cols:
-            w = w.partitionBy(*write_part_cols)
-        w.parquet(out_dir)
-        # walk the hive layout back into add actions (same decode as
-        # create_minimal_table: dir segments are partitionValues);
-        # 0-row part files (e.g. from an empty source) never register —
-        # stat-less empty adds would only add scan/scheduling tax
-        import pyarrow.parquet as pq
-
-        new_files: list[tuple[str, dict]] = []
-        for root, _dirs, files in os.walk(out_dir):
-            for f in files:
-                if not f.endswith(".parquet"):
-                    continue
-                full = os.path.join(root, f)
-                if _parquet_num_rows(self.spark, full) == 0:
-                    os.remove(full)
-                    continue
-                new_files.append(
-                    (full, _hive_partition_values(
-                        os.path.relpath(full, out_dir)
-                    ))
-                )
-        if not new_files and not hit_keys:
-            return v  # empty source on no hit files: nothing changed
-        stats_by = (
-            _per_file_stats(
-                self.spark.read.schema(write_schema).parquet(
-                    *[f for f, _pv in new_files]
-                ),
-                stats_fields,
-            )
-            if carries_stats and new_files
-            else {}
-        )
-        actions: list[dict] = [
-            {
-                "remove": {
-                    "path": live[k]["path"],
-                    "deletionTimestamp": 0,
-                    "dataChange": True,
-                }
-            }
-            for k in sorted(hit_keys)
-        ]
-        for f, pv in sorted(new_files):
-            add = {
-                "path": quote(os.path.relpath(f, self.path)),
-                "partitionValues": pv,
-                "size": os.path.getsize(f),
-                "modificationTime": 0,
-                "dataChange": True,
-            }
-            if f in stats_by:
-                add["stats"] = json.dumps(stats_by[f])
-            if rt:
-                n = _parquet_num_rows(self.spark, f)
-                add["baseRowId"] = rt_hwm + 1
-                add["defaultRowCommitVersion"] = v + 1
-                rt_hwm += n
-            actions.append({"add": add})
-        if rt:
-            rt_actions.append(self._rt_domain_action(rt_hwm))
-        return self._publish(
-            self._next_version(), rt_actions + cdc_actions + actions
-        )
+        # survivors and source rows write in ONE hive-partitioned job;
+        # 0-row part files (e.g. from an empty source) never register
+        adds = self._write_data_files(ctx, merged, "merge")
+        if not adds and not hit_keys:
+            return ctx.v  # empty source on no hit files: nothing changed
+        actions = self._removes(live[k]["path"] for k in sorted(hit_keys))
+        return self._dml_publish(ctx, cdc_actions + actions + adds)
 
     @_retry_conflicts
     def optimize(
@@ -4652,216 +3935,60 @@ class DeltaLogReader:
         scans stop paying the anti-join and vacuum can later reclaim
         the orphaned .bin. dataChange stays false: the logical row
         set is unchanged, CDF and streams correctly see nothing."""
-        v = self.latest_version()
-        meta, live = self._replay(v)
+        import math
+
         # OPTIMIZE removes only dataChange=false file references —
         # legal on appendOnly tables, so removes_data=False
-        self._guard_writer_protocol(
-            meta, "optimize", removes_data=False,
-            # rewrites carry every survivor's id AND commit version in
-            # the materialized columns (assigned on first use below)
-            maintains_row_ids=True,
-        )
-        schema = self._schema_from_meta(meta)
-        part_cols = self._logical_part_cols(meta, schema)
-        data_fields = [f for f in schema.fields if f.name not in part_cols]
-        mode = self._mapping_mode(meta)
-        file_schema, logical_sel = self._file_schema_and_logical(
-            data_fields, mode
-        )
-        phys_sel, write_schema, stats_fields = self._write_side(
-            data_fields, mode
-        )
+        ctx = self._dml_context("optimize", removes_data=False)
         if zorder_by is not None:
-            bad = sorted(
-                set(zorder_by) - {f.name for f in data_fields}
-            )
+            bad = sorted(set(zorder_by) - {f.name for f in ctx.data_fields})
             if bad:
                 raise ValueError(
                     f"zorder_by columns must be data columns: {bad}"
                 )
-
-        def abspath(p: str) -> str:
-            p = unquote(p)
-            return p if p.startswith("/") else os.path.join(self.path, p)
-
-        carries_stats = any("stats" in a for a in live.values())
         # ROW TRACKING (round 9): a compacted file mixes rows from
         # files with DIFFERENT baseRowIds and commit versions, so the
-        # rewrite materializes BOTH per row (old id = materialized
-        # else base + position; old commit version = materialized else
-        # the source add's default) — the spec's preserved-rewrite
-        # obligation. New files still get fresh baseRowId ranges; the
-        # materialized values override on read.
-        rt = self._row_tracking_on(meta)
-        rt_actions: list[dict] = []
-        mat_id = mat_rcv = None
-        rt_hwm = -1
-        rt_map_df = None
-        if rt:
-            mat_id, mat_rcv, rt_actions = self._rt_materialized_cols(meta)
-            rt_map_df = self._rt_base_map_df(live.values(), abspath)
-            rt_hwm = self._row_id_high_water_mark(live)
-        groups: dict[tuple, list[tuple[str, dict]]] = {}
-        for key, a in live.items():
-            pv = a.get("partitionValues") or {}
-            groups.setdefault(
-                tuple(pv.get(c) for c in part_cols), []
-            ).append((key, a))
+        # rewrite materializes BOTH per row — the spec's
+        # preserved-rewrite obligation. New files still get fresh
+        # baseRowId ranges; the materialized values override on read.
+        self._rt_begin(ctx)
         actions: list[dict] = []
-        import math
-
-        for k in sorted(
-            groups,
-            key=lambda kv: tuple((x is not None, x or "") for x in kv),
-        ):
+        for _k, group in self._partition_groups(ctx, ctx.live.values()):
             if zorder_by is None:
                 small = [
-                    (key, a)
-                    for key, a in groups[k]
+                    a
+                    for a in group
                     if a.get("size", 0) < target_bytes // 2
                     or a.get("deletionVector")  # purge: always rewrite
                 ]
                 if len(small) <= 1 and not any(
-                    a.get("deletionVector") for _k, a in small
+                    a.get("deletionVector") for a in small
                 ):
                     continue
             else:
-                small = list(groups[k])  # clustering rewrites the group
-                if not small:
-                    continue
-            files = sorted(abspath(a["path"]) for _k, a in small)
+                small = group  # clustering rewrites the group
             n_out = max(
                 1,
-                math.ceil(
-                    sum(a.get("size", 0) for _k, a in small) / target_bytes
-                ),
+                math.ceil(sum(a.get("size", 0) for a in small) / target_bytes),
             )
-            read_schema = file_schema
-            if rt:
-                read_schema = T.StructType(
-                    list(file_schema.fields)
-                    + [
-                        T.StructField(mat_id, T.LongType(), True),
-                        T.StructField(mat_rcv, T.LongType(), True),
-                    ]
-                )
-            scan = self.spark.read.schema(read_schema).parquet(*files)
-            dv_rows = [
-                self._dv_descriptor(a, abspath)
-                for _k, a in small
-                if a.get("deletionVector")
-            ]
-            if dv_rows or rt:
-                norm = lambda c: F.regexp_replace(  # noqa: E731
-                    c, "^file:/+", "/"
-                )
-                scan = scan.select(
-                    *logical_sel,
-                    *([F.col(mat_id), F.col(mat_rcv)] if rt else []),
-                    norm(F.col("_metadata.file_path")).alias("__path"),
-                    F.col("_metadata.row_index").alias("__pos"),
-                )
-                if dv_rows:
-                    pos_df = self._dv_positions_df(dv_rows).select(
-                        norm(F.col("file_path")).alias("__del_path"),
-                        F.col("pos").alias("__del_pos"),
-                    )
-                    scan = scan.join(
-                        F.broadcast(pos_df),
-                        (F.col("__path") == F.col("__del_path"))
-                        & (F.col("__pos") == F.col("__del_pos")),
-                        "left_anti",
-                    )
-                if rt:
-                    scan = (
-                        scan.join(F.broadcast(rt_map_df), "__path", "left")
-                        .withColumn(
-                            "__rid",
-                            F.coalesce(
-                                F.col(mat_id),
-                                F.col("__base") + F.col("__pos"),
-                            ),
-                        )
-                        .withColumn(
-                            "__rcv",
-                            F.coalesce(F.col(mat_rcv), F.col("__dfrcv")),
-                        )
-                        .drop(mat_id, mat_rcv, "__base", "__dfrcv")
-                    )
-                scan = scan.drop("__path", "__pos")
-            else:
-                scan = scan.select(*logical_sel)
+            scan = self._scan_live_rows(ctx, small, lineage=ctx.rt)
             if zorder_by is None:
                 packed = scan.coalesce(n_out)
             else:
                 from ..functions.zorder import pack_zorder
 
                 packed = pack_zorder(scan, n_out, zorder_by)
-            if phys_sel is not None:
-                packed = packed.select(
-                    *phys_sel,
-                    *([F.col("__rid"), F.col("__rcv")] if rt else []),
-                )
-            if rt:
-                packed = packed.withColumnRenamed(
-                    "__rid", mat_id
-                ).withColumnRenamed("__rcv", mat_rcv)
-            out_dir = os.path.join(self.path, f"_optimize_{uuid4().hex}")
-            packed.write.mode("errorifexists").parquet(out_dir)
-            import pyarrow.parquet as _pq
-
-            new_files = []
-            for f in sorted(os.listdir(out_dir)):
-                full = os.path.join(out_dir, f)
-                if not f.endswith(".parquet"):
-                    continue
-                # a fully-tombstoned group compacts to 0 rows: drop the
-                # empty part files rather than reference them
-                if _parquet_num_rows(self.spark, full) == 0:
-                    os.remove(full)
-                else:
-                    new_files.append(full)
-            stats_by = (
-                _per_file_stats(
-                    self.spark.read.schema(write_schema).parquet(*new_files),
-                    stats_fields,
-                )
-                if carries_stats and new_files
-                else {}
+            actions += self._removes(
+                (a["path"] for a in small), data_change=False
             )
-            pv = dict(small[0][1].get("partitionValues") or {})
-            for key, _a in small:
-                actions.append(
-                    {
-                        "remove": {
-                            "path": key,
-                            "deletionTimestamp": 0,
-                            "dataChange": False,
-                        }
-                    }
-                )
-            for f in new_files:
-                add = {
-                    "path": quote(os.path.relpath(f, self.path)),
-                    "partitionValues": pv,
-                    "size": os.path.getsize(f),
-                    "modificationTime": 0,
-                    "dataChange": False,
-                }
-                if f in stats_by:
-                    add["stats"] = json.dumps(stats_by[f])
-                if rt:
-                    n = _parquet_num_rows(self.spark, f)
-                    add["baseRowId"] = rt_hwm + 1
-                    add["defaultRowCommitVersion"] = v + 1
-                    rt_hwm += n
-                actions.append({"add": add})
+            actions += self._write_data_files(
+                ctx, packed, "optimize",
+                dict(small[0].get("partitionValues") or {}),
+                data_change=False,
+            )
         if not actions:
-            return v
-        if rt:
-            rt_actions.append(self._rt_domain_action(rt_hwm))
-        return self._publish(self._next_version(), rt_actions + actions)
+            return ctx.v
+        return self._dml_publish(ctx, actions)
 
     @_retry_conflicts
     def restore(self, version: int) -> int:
@@ -4912,7 +4039,7 @@ class DeltaLogReader:
         ]
         for p, a in old_live.items():
             if a.get("deletionVector"):
-                b = self._dv_descriptor(a, self._abs)[3]
+                b = self._dv_descriptor(a)[3]
                 if b and not os.path.exists(b):
                     missing.append(b)
         if missing:
@@ -4955,29 +4082,10 @@ class DeltaLogReader:
             flips = sorted(gone_set & back_set)
 
             def whole(live: dict, ks: list[str], tag: str):
-                plain_ents, dv_adds = [], []
-                for p in ks:
-                    a = live[p]
-                    if a.get("deletionVector"):
-                        dv_adds.append(a)
-                    else:
-                        plain_ents.append(
-                            (self._abs(p), a.get("partitionValues") or {})
-                        )
-                out = self._scan_with_parts(
-                    plain_ents, data_fields, list(schema.fields),
+                out = self._rows_of(
+                    [live[p] for p in ks], schema, data_fields,
                     part_cols, fields_by_name, mode,
                 )
-                live_part = self._dv_live_rows(
-                    dv_adds, schema, data_fields, part_cols,
-                    fields_by_name, self._abs, mode,
-                )
-                if live_part is not None:
-                    out = (
-                        live_part
-                        if out is None
-                        else out.unionByName(live_part)
-                    )
                 return (
                     out.withColumn("_change_type", F.lit(tag))
                     if out is not None
@@ -4993,8 +4101,7 @@ class DeltaLogReader:
                         for p in flips
                         if old_live[p].get("deletionVector")
                     ],
-                    schema, data_fields, part_cols, fields_by_name,
-                    self._abs, mode,
+                    schema, data_fields, part_cols, fields_by_name, mode,
                 ),  # target − current: re-tombstoned (tagged delete)
             ]
             resurrect = self._dv_transition_deletes(
@@ -5003,8 +4110,7 @@ class DeltaLogReader:
                     for p in flips
                     if cur_live[p].get("deletionVector")
                 ],
-                schema, data_fields, part_cols, fields_by_name,
-                self._abs, mode,
+                schema, data_fields, part_cols, fields_by_name, mode,
             )
             if resurrect is not None:  # current − target: resurrected
                 parts.append(
@@ -5054,7 +4160,7 @@ class DeltaLogReader:
             for a in live.values():
                 keep.add(os.path.realpath(self._abs(a["path"])))
                 if a.get("deletionVector"):
-                    b = self._dv_descriptor(a, self._abs)[3]
+                    b = self._dv_descriptor(a)[3]
                     if b:  # '' = inline vector, no file to protect
                         keep.add(os.path.realpath(b))
         # every path any replayable commit ever added; cdc files
@@ -5070,7 +4176,7 @@ class DeltaLogReader:
                     if add.get("deletionVector"):
                         # purged/superseded vectors reclaim with their
                         # snapshots; referenced ones are in `keep`
-                        b = self._dv_descriptor(add, self._abs)[3]
+                        b = self._dv_descriptor(add)[3]
                         if b:
                             seen.add(os.path.realpath(b))
                 cdc = action.get("cdc")
@@ -5091,6 +4197,12 @@ class DeltaLogReader:
         return deleted
 
     def _abs(self, p: str) -> str:
+        """An action's path on the filesystem. PROTOCOL.md: add.path
+        is a URL-encoded path RELATIVE to the table root (external
+        writers encode spaces, '=', '%', non-ASCII in file and
+        partition-directory names), or absolute (shallow clones).
+        The encoded form stays the live-set dict key for add/remove
+        reconciliation."""
         p = unquote(p)
         return p if p.startswith("/") else os.path.join(self.path, p)
 
@@ -5344,7 +4456,7 @@ class DeltaLogReader:
             json.dump({"version": v, "size": n_actions}, fh)
         return v
 
-    def _dv_descriptor(self, a: dict, abspath) -> tuple:
+    def _dv_descriptor(self, a: dict) -> tuple:
         """Resolve one add action's deletionVector into a flat
         descriptor row (data_path, storage, payload, bin_path, offset).
         Path resolution is driver logic; executors only read bytes."""
@@ -5352,7 +4464,7 @@ class DeltaLogReader:
 
         dv = a["deletionVector"]
         st = dv.get("storageType")
-        data_path = abspath(a["path"])
+        data_path = self._abs(a["path"])
         size = int(dv.get("sizeInBytes") or 0)
         if st == "i":
             return (data_path, "i", dv["pathOrInlineDv"], "", 0, size)
@@ -5444,13 +4556,13 @@ class DeltaLogReader:
             decode, "file_path string, pos long"
         )
 
-    def _decode_dv_positions(self, a: dict, abspath) -> list[int]:
+    def _decode_dv_positions(self, a: dict) -> list[int]:
         """Driver-side decode of one add action's deletion vector —
         bounded by that file's tombstone count. Scans use the
         executor-side _dv_positions_df instead."""
         from ..functions import roaring
 
-        d = self._dv_descriptor(a, abspath)
+        d = self._dv_descriptor(a)
         return roaring.positions_from_descriptor(
             d[1], d[2], d[3], d[4], d[5]
         )
@@ -5462,7 +4574,6 @@ class DeltaLogReader:
         data_fields: list[T.StructField],
         part_cols: list[str],
         fields_by_name: dict[str, T.StructField],
-        abspath,
         mode: str = "none",
     ) -> DataFrame | None:
         """Render the rows a commit's deletion-vector updates deleted:
@@ -5472,138 +4583,77 @@ class DeltaLogReader:
         it at those _metadata.row_index positions recovers the
         deleted rows. Cost ∝ deleted rows + one scan of the touched
         files; the position pairs are broadcast."""
-        pv_key = self._pv_key(fields_by_name, mode)
         pairs: list[tuple[str, int]] = []
-        groups: dict[tuple, list[str]] = {}
         for a, prev in dv_transitions:
-            newp = set(self._decode_dv_positions(a, abspath))
+            newp = set(self._decode_dv_positions(a))
             oldp = (
-                set(self._decode_dv_positions(prev, abspath))
+                set(self._decode_dv_positions(prev))
                 if prev.get("deletionVector")
                 else set()
             )
-            ap = abspath(a["path"])
+            ap = self._abs(a["path"])
             pairs.extend((ap, int(p)) for p in sorted(newp - oldp))
-            pv = a.get("partitionValues") or {}
-            groups.setdefault(
-                tuple(pv.get(pv_key(c)) for c in part_cols), []
-            ).append(ap)
         if not pairs:
             return None
-        norm = lambda c: F.regexp_replace(c, "^file:/+", "/")  # noqa: E731
-        pairs_df = local_frame(
-            self.spark,
-            pairs, "__del_path string, __del_pos long"
+        scanned = self._scan_with_parts(
+            [
+                (self._abs(a["path"]), a.get("partitionValues") or {})
+                for a, _prev in dv_transitions
+            ],
+            data_fields, schema.fields, part_cols, fields_by_name, mode,
+            positions=True,
         )
-        data_schema, sel = self._file_schema_and_logical(
-            data_fields, mode
-        )
-        scanned: DataFrame | None = None
-        for key in sorted(
-            groups,
-            key=lambda kv: tuple((x is not None, x or "") for x in kv),
-        ):
-            g = self.spark.read.schema(data_schema).parquet(
-                *sorted(groups[key])
-            )
-            g = g.select(
-                *sel,
-                norm(F.col("_metadata.file_path")).alias("__path"),
-                F.col("_metadata.row_index").alias("__pos"),
-            )
-            for c, raw in zip(part_cols, key):
-                dt = fields_by_name[c].dataType
-                g = g.withColumn(
-                    c,
-                    F.lit(raw).cast(dt)
-                    if raw is not None
-                    else F.lit(None).cast(dt),
-                )
-            scanned = g if scanned is None else scanned.unionByName(g)
         return (
-            scanned.join(
-                F.broadcast(pairs_df),
-                (F.col("__path") == F.col("__del_path"))
-                & (F.col("__pos") == F.col("__del_pos")),
-                "inner",
+            rowlevel.join_tombstones(
+                scanned,
+                local_frame(self.spark, pairs, "file_path string, pos long"),
+                how="inner",
             )
             .select(*[f.name for f in schema.fields])
             .withColumn("_change_type", F.lit("delete"))
         )
 
-    def _dv_live_rows(
+    def _rows_of(
         self,
-        prev_adds: list[dict],
+        adds: list[dict],
         schema: T.StructType,
         data_fields: list[T.StructField],
         part_cols: list[str],
         fields_by_name: dict[str, T.StructField],
-        abspath,
         mode: str = "none",
     ) -> DataFrame | None:
-        """The LIVE rows of vector-carrying add actions: scan the
-        files with `_metadata.row_index` and anti-join out each
-        vector's positions — mirrors how read() applies vectors on
-        the snapshot path. Two CDF uses: a whole-file REMOVE of a
-        vectored file renders only its live rows as deletes (the
-        tombstoned positions were already emitted by the commit that
-        grew the vector — re-emitting would double-count), and a new
-        file ADDED with a birth vector renders only its live rows as
-        inserts (the tombstoned positions were never visible)."""
-        if not prev_adds:
-            return None
-        pv_key = self._pv_key(fields_by_name, mode)
-        pairs: list[tuple[str, int]] = []
-        groups: dict[tuple, list[str]] = {}
-        for a in prev_adds:
-            ap = abspath(a["path"])
-            pairs.extend(
-                (ap, int(p))
-                for p in self._decode_dv_positions(a, abspath)
-            )
-            pv = a.get("partitionValues") or {}
-            groups.setdefault(
-                tuple(pv.get(pv_key(c)) for c in part_cols), []
-            ).append(ap)
-        norm = lambda c: F.regexp_replace(c, "^file:/+", "/")  # noqa: E731
-        data_schema, sel = self._file_schema_and_logical(
-            data_fields, mode
+        """The LIVE rows of add actions, partition columns attached:
+        plain files scan as-is, and vector-carrying files scan with
+        `_metadata.row_index`, their vectors' positions anti-joined
+        out — how read() applies vectors on the snapshot path. The
+        change paths need it: a whole-file REMOVE of a vectored file
+        renders only its live rows as deletes (the tombstoned
+        positions were already emitted by the commit that grew the
+        vector), and a file ADDED with a birth vector renders only its
+        live rows as inserts (the tombstoned positions were never
+        visible). None when `adds` is empty."""
+        ents = lambda dv: [  # noqa: E731
+            (self._abs(a["path"]), a.get("partitionValues") or {})
+            for a in adds
+            if bool(a.get("deletionVector")) == dv
+        ]
+        out = self._scan_with_parts(
+            ents(False), data_fields, schema.fields, part_cols,
+            fields_by_name, mode,
         )
-        scanned: DataFrame | None = None
-        for key in sorted(
-            groups,
-            key=lambda kv: tuple((x is not None, x or "") for x in kv),
-        ):
-            g = self.spark.read.schema(data_schema).parquet(
-                *sorted(groups[key])
-            )
-            g = g.select(
-                *sel,
-                norm(F.col("_metadata.file_path")).alias("__path"),
-                F.col("_metadata.row_index").alias("__pos"),
-            )
-            for c, raw in zip(part_cols, key):
-                dt = fields_by_name[c].dataType
-                g = g.withColumn(
-                    c,
-                    F.lit(raw).cast(dt)
-                    if raw is not None
-                    else F.lit(None).cast(dt),
-                )
-            scanned = g if scanned is None else scanned.unionByName(g)
-        pairs_df = local_frame(
-            self.spark,
-            pairs, "__del_path string, __del_pos long"
+        vectored = self._scan_with_parts(
+            ents(True), data_fields, schema.fields, part_cols,
+            fields_by_name, mode, positions=True,
         )
-        return (
-            scanned.join(
-                F.broadcast(pairs_df),
-                (F.col("__path") == F.col("__del_path"))
-                & (F.col("__pos") == F.col("__del_pos")),
-                "left_anti",
-            )
-            .select(*[f.name for f in schema.fields])
-        )
+        if vectored is None:
+            return out
+        dv_rows = [
+            self._dv_descriptor(a) for a in adds if a.get("deletionVector")
+        ]
+        vectored = rowlevel.join_tombstones(
+            vectored, self._dv_positions_df(dv_rows)
+        ).select(*[f.name for f in schema.fields])
+        return vectored if out is None else out.unionByName(vectored)
 
     def history(self) -> list[dict]:
         """Per-commit summary from the JSON log (checkpointed-away

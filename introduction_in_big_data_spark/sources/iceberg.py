@@ -45,12 +45,14 @@ from __future__ import annotations
 import json
 import os
 import re
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..session import barrier, local_frame
+from . import rowlevel
 
 
 class UnsupportedIcebergFeature(Exception):
@@ -2299,6 +2301,23 @@ def append_partitioned_snapshot(
     )
 
 
+@dataclass
+class _DmlMatches:
+    """One row-level DML statement's view of the current snapshot
+    (IcebergTableReader._dml_matches): its live data / position-delete
+    / equality-delete files and the matched live rows — None when
+    manifest-bounds pruning proved no file can match."""
+
+    meta: dict
+    base: int
+    snapshot: dict
+    data: list
+    pos_deletes: list
+    eq: list
+    lineage: bool
+    matched: DataFrame | None = None
+
+
 class IcebergTableReader:
     """Snapshot reader over an Iceberg table directory.
 
@@ -2728,14 +2747,6 @@ class IcebergTableReader:
             for b in branches[1:]:
                 out = out.unionByName(b)
             return out
-        norm = lambda c: F.regexp_replace(c, "^file:/+", "/")  # noqa: E731
-
-        def pos_cols():
-            return [
-                norm(F.col("_metadata.file_path")).alias("__path"),
-                F.col("_metadata.row_index").alias("__pos"),
-            ]
-
         mapping = self._name_mapping(meta)
         if mapping is None:
             scan = self.spark.read.schema(scan_schema).parquet(*files)
@@ -2772,9 +2783,6 @@ class IcebergTableReader:
                         )
                         if not present:
                             lacking.setdefault(f["name"], []).append(p)
-                norm_d = lambda c: F.regexp_replace(  # noqa: E731
-                    c, "^file:/+", "/"
-                )
                 for f in defaults:
                     lack = lacking.get(f["name"])
                     if not lack:
@@ -2782,13 +2790,17 @@ class IcebergTableReader:
                     scan = scan.withColumn(
                         f["name"],
                         F.when(
-                            norm_d(F.col("_metadata.file_path")).isin(lack),
+                            rowlevel.norm_path(
+                                F.col("_metadata.file_path")
+                            ).isin(lack),
                             default_literal(
                                 f["type"], f["initial-default"]
                             ),
                         ).otherwise(F.col(f["name"])),
                     )
-            return scan.select("*", *pos_cols()) if with_pos else scan
+            if with_pos:
+                scan = scan.select("*", *rowlevel.position_cols())
+            return scan
         import pyarrow.parquet as pq
 
         field_list = self._schema_fields(meta)
@@ -2860,13 +2872,13 @@ class IcebergTableReader:
             scan = self.spark.read.schema(scan_schema).parquet(
                 *sorted(with_ids)
             )
-            parts.append(
-                scan.select("*", *pos_cols()) if with_pos else scan
-            )
+            if with_pos:
+                scan = scan.select("*", *rowlevel.position_cols())
+            parts.append(scan)
         for key in sorted(without):
             phys_schema, sel, grp = without[key]
             g = self.spark.read.schema(phys_schema).parquet(*sorted(grp))
-            extra = pos_cols() if with_pos else []
+            extra = rowlevel.position_cols() if with_pos else []
             parts.append(g.select(*sel, *extra))
         out = parts[0]
         for p in parts[1:]:
@@ -3683,21 +3695,13 @@ class IcebergTableReader:
         # sides; every delete side broadcasts (delete files are compact
         # by construction — they exist to AVOID rewriting data files),
         # so the data scan never shuffles.
-        norm = lambda c: F.regexp_replace(c, "^file:/+", "/")  # noqa: E731
         cols = [f.name for f in scan_schema.fields]
 
         if pos_deletes:
             # (file_path, pos) anti-join against the scan's per-file
             # row index (_metadata.row_index — exactly the spec's pos)
-            pos_df = self._position_deletes(pos_deletes).select(
-                norm(F.col("file_path")).alias("__del_path"),
-                F.col("pos").alias("__del_pos"),
-            )
-            df = df.join(
-                F.broadcast(pos_df),
-                (F.col("__path") == F.col("__del_path"))
-                & (F.col("__pos") == F.col("__del_pos")),
-                "left_anti",
+            df = rowlevel.join_tombstones(
+                df, self._position_deletes(pos_deletes)
             )
 
         if eq_deletes:
@@ -3744,13 +3748,12 @@ class IcebergTableReader:
     def _attach_seq(self, df: DataFrame, data) -> DataFrame:
         """Attach each row's data file SEQUENCE number (`__seq`) via a
         broadcast (path, seq) join — the gate equality deletes test."""
-        norm = lambda c: F.regexp_replace(c, "^file:/+", "/")  # noqa: E731
         seq_df = local_frame(
             self.spark,
             [(p, s) for p, (s, _st) in data],
             "file_path string, seq long",
         ).select(
-            norm(F.col("file_path")).alias("__path"),
+            rowlevel.norm_path(F.col("file_path")).alias("__path"),
             F.col("seq").alias("__seq"),
         )
         return df.join(F.broadcast(seq_df), "__path", "left")
@@ -4090,43 +4093,26 @@ class IcebergTableReader:
                 kept.append((path, (seq, st)))
         return kept
 
-    def _apply_eq_deletes_for_dml(
-        self, scan: DataFrame, eq, meta: dict, candidates
+    def _live_rows(
+        self, meta: dict, cand, pos_deletes, eq, lineage: bool = False
     ) -> DataFrame:
-        """Apply existing equality deletes to a DML hit-detection scan
-        (columns `__p`/`__pos` + data columns): attach each candidate
-        file's data sequence and anti-join the sequence-gated delete
-        rows — the read path's own `_eq_delete_join`, so DML sees
-        exactly the live set a reader sees. A Flink-CDC table's
-        eq-deleted rows are therefore never re-tombstoned (idempotent
-        re-runs) and never counted as DML hits."""
-        scan = self._attach_seq(
-            scan.withColumnRenamed("__p", "__path"), candidates
-        )
-        return (
-            self._eq_delete_join(
-                scan, eq, meta, self._scan_schema(meta), "left_anti"
-            )
-            .drop("__seq")
-            .withColumnRenamed("__path", "__p")
-        )
-
-    def _dml_scan(
-        self, meta: dict, files: list[str], with_lineage_col: bool
-    ) -> DataFrame:
-        """The candidate-file scan every DML path hit-detects over —
-        routed through _data_scan (round 10) so DML projects files
-        EXACTLY as reads do: field-id projection on schema-evolved
-        tables (a renamed column resolves out of old files by id —
-        the name-matched scan this replaces silently read nulls
-        there), the per-file name-mapping projection for id-less
-        Hive-migrated files, and materialized `_row_id` passthrough.
-        Emits the logical columns under their CURRENT names plus
-        `__p` (normalized file path) / `__pos` (row index), and — when
-        `with_lineage_col` — a `_row_id` column (materialized value or
-        null, for the caller's first_row_id-derivation coalesce)."""
+        """The rows of data files `cand` ((path, (seq, stats))
+        entries) exactly as a reader sees them: logical columns under
+        their CURRENT names plus `__path` / `__pos`. The scan goes
+        through _data_scan (round 10), so DML projects files EXACTLY
+        as reads do: field-id projection on schema-evolved tables (a
+        renamed column resolves out of old files by id), the per-file
+        name-mapping projection for id-less Hive-migrated files, and
+        materialized `_row_id` passthrough. Existing position deletes
+        and v3 vectors are anti-joined through rowlevel (a tombstoned
+        row never re-deletes, so re-runs commit nothing); equality
+        deletes apply sequence-gated through the read path's own
+        `_eq_delete_join` (a Flink-CDC row an eq-delete already
+        removed is never a DML hit). With `lineage`, each row's
+        `_row_id` (materialized, else first_row_id + position) and its
+        file's data sequence `__fseq` ride along."""
         read_schema = self._scan_schema(meta)
-        if with_lineage_col:
+        if lineage:
             read_schema = T.StructType(
                 list(read_schema.fields)
                 + [
@@ -4138,13 +4124,204 @@ class IcebergTableReader:
             )
         scan = self._data_scan(
             meta,
-            files,
+            [p for p, _ in cand],
             read_schema,
             with_pos=True,
-            mat_row_ids=with_lineage_col,
-            mat_seq=with_lineage_col,
+            mat_row_ids=lineage,
+            mat_seq=lineage,
         )
-        return scan.withColumnRenamed("__path", "__p")
+        if lineage:
+            rid_df = local_frame(
+                self.spark,
+                [
+                    (p, int(st["first_row_id"]), int(s))
+                    for p, (s, st) in cand
+                    if st.get("first_row_id") is not None
+                ],
+                "__path string, __first long, __fseq long",
+            )
+            scan = (
+                scan.join(F.broadcast(rid_df), "__path", "left")
+                .withColumn(
+                    "_row_id",
+                    F.coalesce(
+                        F.col("_row_id"), F.col("__first") + F.col("__pos")
+                    ),
+                )
+                .drop("__first")
+            )
+        if pos_deletes:
+            scan = rowlevel.join_tombstones(
+                scan, self._position_deletes(pos_deletes)
+            )
+        if eq:
+            scan = self._eq_delete_join(
+                self._attach_seq(scan, cand),
+                eq,
+                meta,
+                self._scan_schema(meta),
+                "left_anti",
+            ).drop("__seq")
+        return scan
+
+    def _dml_matches(
+        self, op: str, predicates: list, set_exprs: dict | None = None
+    ) -> _DmlMatches:
+        """The front half every Iceberg row-level DML shares: the
+        current snapshot's live files, the predicate (and UPDATE
+        assignments) validated, candidates pruned on manifest bounds
+        with the read path's math, and — unless pruning proves no
+        file can match (`matched` None) — the candidates' live rows
+        (_live_rows) that satisfy the predicate. UPDATE images on a
+        row-lineage table carry each row's old `_row_id`."""
+        from . import skipping
+
+        meta, base = self._meta_and_base()
+        snapshot = next(
+            s
+            for s in meta["snapshots"]
+            if s["snapshot-id"] == meta["current-snapshot-id"]
+        )
+        data, pos_deletes, eq = self._live_files(snapshot)
+        names = self._schema_struct(meta).fieldNames()
+        skipping.validate(predicates, names)
+        if set_exprs is not None:
+            rowlevel.check_assignments(op, set_exprs, names)
+        d = _DmlMatches(
+            meta, base, snapshot, data, pos_deletes, eq,
+            lineage=(
+                set_exprs is not None
+                and meta.get("next-row-id") is not None
+            ),
+        )
+        candidates = self._prune_data_files(data, predicates, meta)
+        if candidates:
+            d.matched = self._live_rows(
+                meta, candidates, pos_deletes, eq, d.lineage
+            ).filter(skipping.residual_filter(predicates))
+        return d
+
+    def _stage_position_deletes(
+        self, matched: DataFrame
+    ) -> tuple[str, int] | None:
+        """Write the matched rows' (file_path, pos) as ONE format-v2
+        position-delete file under data/ — distributed, in the spec's
+        (file_path, pos) order (delete files are compact by design:
+        they exist to avoid rewriting data files). Returns (path,
+        rows), or None when nothing matched (no empty commit)."""
+        import shutil
+        import uuid as _uuidmod
+
+        import pyarrow.parquet as pq
+
+        tmp = os.path.join(self.path, f"_stage_del_{_uuidmod.uuid4().hex}")
+        matched.select(
+            F.concat(F.lit("file://"), F.col("__path")).alias("file_path"),
+            F.col("__pos").alias("pos"),
+        ).repartition(1).sortWithinPartitions(
+            "file_path", "pos"
+        ).write.parquet(tmp)
+        src = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
+        n_rows = pq.ParquetFile(os.path.join(tmp, src)).metadata.num_rows
+        if n_rows == 0:
+            shutil.rmtree(tmp, ignore_errors=True)
+            return None
+        data_dir = os.path.join(self.path, "data")
+        # zero-copy imported tables have no data/ yet (their files
+        # live at the source paths) — first engine write creates it
+        os.makedirs(data_dir, exist_ok=True)
+        del_file = os.path.join(
+            data_dir, f"delete-{_uuidmod.uuid4().hex}.parquet"
+        )
+        os.rename(os.path.join(tmp, src), del_file)
+        shutil.rmtree(tmp, ignore_errors=True)
+        return del_file, n_rows
+
+    def _merge_dvs(
+        self, pos_deletes, new_by_path: dict[str, list[int]]
+    ) -> dict[str, list[int]]:
+        """One deletion vector per data file (spec v3): each hit
+        file's new positions merged with its previous vector, whose
+        manifest entry _publish_dv_snapshot then retires."""
+        from ..functions import puffin
+
+        prev_dv = {
+            e[4]: e
+            for e in pos_deletes
+            if e[1] == "PUFFIN" and e[4] in new_by_path
+        }
+        merged: dict[str, list[int]] = {}
+        for p, positions in new_by_path.items():
+            old: list[int] = []
+            if p in prev_dv:
+                pf, _fmt, off, sz, _ref = prev_dv[p]
+                old = puffin.decode_deletion_vector(
+                    puffin.read_blob(pf, off, sz)
+                )
+            merged[p] = sorted(set(old) | set(positions))
+        return merged
+
+    def _stage_update_images(
+        self, d: _DmlMatches, matched: DataFrame, set_exprs: dict
+    ) -> tuple[str, int, dict | None]:
+        """Stage UPDATE images — ONE projection over the matched OLD
+        rows, so every right-hand side sees the old row — as one data
+        file plus its manifest. The images' sequence number is past
+        EVERY live eq-delete too, so a re-inserted image survives the
+        strictly-smaller gate; on a row-lineage table each image
+        carries its old `_row_id` materialized and the file a fresh
+        first_row_id range. Returns (manifest path, sequence number,
+        metadata updates)."""
+        import uuid as _uuidmod
+
+        import pyarrow.parquet as pq
+
+        from ..functions import avrocodec
+
+        updated = matched.select(
+            *rowlevel.assign(set_exprs, self._schema_struct(d.meta).fields),
+            *(["_row_id"] if d.lineage else []),
+        )
+        data_path = _stage_parquet(
+            self.spark,
+            self.path,
+            updated,
+            fields=self._schema_fields(d.meta),
+        )
+        n_rows = pq.ParquetFile(data_path).metadata.num_rows
+        seqs = [s for _p, (s, _st) in d.data] + [e[2] for e in d.eq]
+        n = (max(seqs) if seqs else 0) + 1
+        dfile = {
+            "content": 0,
+            "file_path": f"file://{data_path}",
+            "file_format": "PARQUET",
+            "record_count": n_rows,
+            "file_size_in_bytes": os.path.getsize(data_path),
+            "equality_ids": None,
+        }
+        m_schema = _MANIFEST_V2_SCHEMA
+        meta_updates = None
+        if d.lineage:
+            first = int(d.meta["next-row-id"])
+            dfile["first_row_id"] = first
+            meta_updates = {"next-row-id": first + n_rows}
+            m_schema = _with_first_row_id_field(_MANIFEST_V2_SCHEMA)
+        manifest = os.path.join(
+            self.path, "metadata", f"{_uuidmod.uuid4().hex}-m0.avro"
+        )
+        avrocodec.write_container(
+            manifest,
+            m_schema,
+            [
+                {
+                    "status": 1,
+                    "snapshot_id": None,
+                    "sequence_number": n,
+                    "data_file": dfile,
+                }
+            ],
+        )
+        return manifest, n, meta_updates
 
     def delete_where(self, predicates: list) -> int:
         """DELETE WHERE as a MERGE-ON-READ commit: instead of
@@ -4163,69 +4340,16 @@ class IcebergTableReader:
         re-tombstones a row an eq-delete already removed. Returns
         the new snapshot id, or the current one when provably
         nothing matches."""
-        import uuid as _uuidmod
-
-        from . import skipping
-
-        meta = self.metadata()
-        snap_id = meta["current-snapshot-id"]
-        snapshot = next(
-            s for s in meta["snapshots"] if s["snapshot-id"] == snap_id
+        d = self._dml_matches("delete_where", predicates)
+        staged = (
+            self._stage_position_deletes(d.matched)
+            if d.matched is not None
+            else None
         )
-        data, pos_deletes, eq = self._live_files(snapshot)
-        schema = self._schema_struct(meta)
-        skipping.validate(predicates, [f.name for f in schema.fields])
-        candidates = self._prune_data_files(data, predicates, meta)
-        if not candidates:
-            return snap_id  # provably nothing to delete
-        files = [p for p, _ in candidates]
-        norm = lambda c: F.regexp_replace(c, "^file:/+", "/")  # noqa: E731
-        scan = self._dml_scan(meta, files, with_lineage_col=False)
-        if pos_deletes:
-            # rows already tombstoned must not re-delete (idempotence:
-            # re-running the same predicate commits nothing)
-            dels = self._position_deletes(pos_deletes).select(
-                norm(F.col("file_path")).alias("__dp"),
-                F.col("pos").alias("__dpos"),
-            )
-            scan = scan.join(
-                F.broadcast(dels),
-                (F.col("__p") == F.col("__dp"))
-                & (F.col("__pos") == F.col("__dpos")),
-                "left_anti",
-            )
-        if eq:
-            scan = self._apply_eq_deletes_for_dml(scan, eq, meta, candidates)
-        hits = scan.filter(skipping.residual_filter(predicates)).select(
-            F.concat(F.lit("file://"), F.col("__p")).alias("file_path"),
-            F.col("__pos").alias("pos"),
-        )
-        tmp = os.path.join(self.path, f"_stage_del_{_uuidmod.uuid4().hex}")
-        # spec: position deletes sort by file_path then pos; one output
-        # file is fine (delete files are compact by design — they exist
-        # to avoid rewriting data files)
-        hits.repartition(1).sortWithinPartitions(
-            "file_path", "pos"
-        ).write.parquet(tmp)
-        import pyarrow.parquet as pq
-        import shutil
-
-        src = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-        n_rows = pq.ParquetFile(os.path.join(tmp, src)).metadata.num_rows
-        if n_rows == 0:
-            shutil.rmtree(tmp, ignore_errors=True)
-            return snap_id  # predicate matched no row: no empty commit
-        data_dir = os.path.join(self.path, "data")
-        # zero-copy imported tables have no data/ yet (their files
-        # live at the source paths) — first engine write creates it
-        os.makedirs(data_dir, exist_ok=True)
-        del_file = os.path.join(
-            data_dir, f"delete-{_uuidmod.uuid4().hex}.parquet"
-        )
-        os.rename(os.path.join(tmp, src), del_file)
-        shutil.rmtree(tmp, ignore_errors=True)
+        if staged is None:
+            return d.snapshot["snapshot-id"]  # nothing matched
         return _commit_position_delete_file(
-            self.spark, self.path, del_file, n_rows
+            self.spark, self.path, *staged
         )
 
     def delete_where_dv(self, predicates: list) -> int:
@@ -4254,65 +4378,18 @@ class IcebergTableReader:
         so the puffin vector is written against the post-eq-delete
         live set. Returns the new snapshot id, or the current one
         when nothing matches."""
-        import uuid as _uuidmod
-
-        from ..functions import avrocodec, puffin
-
-        from . import skipping
-
-        meta, base = self._meta_and_base()
-        snap_id = meta["current-snapshot-id"]
-        snapshot = next(
-            s for s in meta["snapshots"] if s["snapshot-id"] == snap_id
+        d = self._dml_matches("delete_where_dv", predicates)
+        new_by_path = (
+            rowlevel.collect_positions(d.matched)
+            if d.matched is not None
+            else {}
         )
-        data, pos_deletes, eq = self._live_files(snapshot)
-        schema = self._schema_struct(meta)
-        skipping.validate(predicates, [f.name for f in schema.fields])
-        candidates = self._prune_data_files(data, predicates, meta)
-        if not candidates:
-            return snap_id
-        files = [p for p, _ in candidates]
-        norm = lambda c: F.regexp_replace(c, "^file:/+", "/")  # noqa: E731
-        scan = self._dml_scan(meta, files, with_lineage_col=False)
-        if pos_deletes:
-            dels = self._position_deletes(pos_deletes).select(
-                norm(F.col("file_path")).alias("__dp"),
-                F.col("pos").alias("__dpos"),
-            )
-            scan = scan.join(
-                F.broadcast(dels),
-                (F.col("__p") == F.col("__dp"))
-                & (F.col("__pos") == F.col("__dpos")),
-                "left_anti",
-            )
-        if eq:
-            scan = self._apply_eq_deletes_for_dml(scan, eq, meta, candidates)
-        new_by_path = {
-            r["__p"]: [int(x) for x in r["pos"]]
-            for r in scan.filter(skipping.residual_filter(predicates))
-            .groupBy("__p")
-            .agg(F.sort_array(F.collect_list("__pos")).alias("pos"))
-            .collect()
-        }
         if not new_by_path:
-            return snap_id  # stats inconclusive: nothing matched
-        # one DV per data file: merge with each hit file's previous
-        # vector and retire the old entry below
-        prev_dv: dict[str, tuple] = {}
-        for e in pos_deletes:
-            if e[1] == "PUFFIN" and e[4] in new_by_path:
-                prev_dv[e[4]] = e
-        merged: dict[str, list[int]] = {}
-        for p, positions in new_by_path.items():
-            old: list[int] = []
-            if p in prev_dv:
-                _pf, _fmt, off, sz, _ref = prev_dv[p]
-                old = puffin.decode_deletion_vector(
-                    puffin.read_blob(_pf, off, sz)
-                )
-            merged[p] = sorted(set(old) | set(positions))
-
-        return self._publish_dv_snapshot(meta, base, snapshot, merged)
+            return d.snapshot["snapshot-id"]  # nothing matched
+        return self._publish_dv_snapshot(
+            d.meta, d.base, d.snapshot,
+            self._merge_dvs(d.pos_deletes, new_by_path),
+        )
 
     def _publish_dv_snapshot(
         self,
@@ -4517,148 +4594,24 @@ class IcebergTableReader:
         file sequences past EVERY live eq-delete so re-inserted rows
         survive the gate. Returns the new snapshot id, or the
         current one when nothing matches."""
-        import uuid as _uuidmod
-
-        import pyarrow.parquet as pq
-
-        from ..functions import avrocodec
-
-        from . import skipping
-
-        meta, base = self._meta_and_base()
-        snap_id = meta["current-snapshot-id"]
-        snapshot = next(
-            s for s in meta["snapshots"] if s["snapshot-id"] == snap_id
-        )
-        data, pos_deletes, eq = self._live_files(snapshot)
-        schema = self._schema_struct(meta)
-        skipping.validate(predicates, [f.name for f in schema.fields])
-        unknown = sorted(set(set_exprs) - set(schema.fieldNames()))
-        if unknown:
-            raise ValueError(
-                f"update_where_dv: unknown columns {unknown}"
-            )
-        candidates = self._prune_data_files(data, predicates, meta)
-        if not candidates:
-            return snap_id
-        files = [p for p, _ in candidates]
-        norm = lambda c: F.regexp_replace(c, "^file:/+", "/")  # noqa: E731
-        # ROW LINEAGE (round 9): a preserved UPDATE — each image row
-        # carries its OLD _row_id (materialized into the image file;
-        # the read path's override), derived as materialized-if-
-        # present else first_row_id + position
-        lineage = meta.get("next-row-id") is not None
-        scan = self._dml_scan(meta, files, with_lineage_col=lineage)
-        if lineage:
-            rid_df = local_frame(
-                self.spark,
-                [
-                    (p, int(st["first_row_id"]))
-                    for p, (_s, st) in candidates
-                    if st.get("first_row_id") is not None
-                ],
-                "__p string, __first long",
-            )
-            scan = scan.join(F.broadcast(rid_df), "__p", "left").withColumn(
-                "_row_id",
-                F.coalesce(F.col("_row_id"), F.col("__first") + F.col("__pos")),
-            ).drop("__first")
-        if pos_deletes:
-            dels = self._position_deletes(pos_deletes).select(
-                norm(F.col("file_path")).alias("__dp"),
-                F.col("pos").alias("__dpos"),
-            )
-            scan = scan.join(
-                F.broadcast(dels),
-                (F.col("__p") == F.col("__dp"))
-                & (F.col("__pos") == F.col("__dpos")),
-                "left_anti",
-            )
-        if eq:
-            scan = self._apply_eq_deletes_for_dml(scan, eq, meta, candidates)
-        matched = scan.filter(
-            skipping.residual_filter(predicates)
-        ).transform(barrier, eager=True)  # computed once: feeds positions AND images
-        new_by_path = {
-            r["__p"]: [int(x) for x in r["pos"]]
-            for r in matched.groupBy("__p")
-            .agg(F.sort_array(F.collect_list("__pos")).alias("pos"))
-            .collect()
-        }
+        d = self._dml_matches("update_where_dv", predicates, set_exprs)
+        if d.matched is None:
+            return d.snapshot["snapshot-id"]
+        # computed once: feeds the positions AND the images
+        matched = d.matched.transform(barrier, eager=True)
+        new_by_path = rowlevel.collect_positions(matched)
         if not new_by_path:
-            return snap_id
-        prev_dv: dict[str, tuple] = {}
-        for e in pos_deletes:
-            if e[1] == "PUFFIN" and e[4] in new_by_path:
-                prev_dv[e[4]] = e
-        from ..functions import puffin as _puffin
-
-        merged: dict[str, list[int]] = {}
-        for p, positions in new_by_path.items():
-            old: list[int] = []
-            if p in prev_dv:
-                _pf, _fmt, off, sz, _ref = prev_dv[p]
-                old = _puffin.decode_deletion_vector(
-                    _puffin.read_blob(_pf, off, sz)
-                )
-            merged[p] = sorted(set(old) | set(positions))
-        updated = matched.select(
-            *[
-                F.expr(set_exprs[f.name]).cast(f.dataType).alias(f.name)
-                if f.name in set_exprs
-                else F.col(f.name)
-                for f in schema.fields
-            ],
-            *([F.col("_row_id")] if lineage else []),
-        )
-        data_path = _stage_parquet(
-            self.spark,
-            self.path,
-            updated,
-            fields=self._schema_fields(meta),
-        )
-        n_rows = pq.ParquetFile(data_path).metadata.num_rows
-        # past every eq-delete sequence too: an updated image
-        # re-inserted at n must SURVIVE the strictly-smaller gate
-        seqs = [s for _p, (s, _st) in data] + [e[2] for e in eq]
-        n = (max(seqs) if seqs else 0) + 1
-        meta_dir = os.path.join(self.path, "metadata")
-        data_manifest = os.path.join(
-            meta_dir, f"{_uuidmod.uuid4().hex}-m0.avro"
-        )
-        dfile = {
-            "content": 0,
-            "file_path": f"file://{data_path}",
-            "file_format": "PARQUET",
-            "record_count": n_rows,
-            "file_size_in_bytes": os.path.getsize(data_path),
-            "equality_ids": None,
-        }
-        m_schema = _MANIFEST_V2_SCHEMA
-        meta_updates = None
-        if lineage:
-            first = int(meta["next-row-id"])
-            dfile["first_row_id"] = first
-            meta_updates = {"next-row-id": first + n_rows}
-            m_schema = _with_first_row_id_field(_MANIFEST_V2_SCHEMA)
-        avrocodec.write_container(
-            data_manifest,
-            m_schema,
-            [
-                {
-                    "status": 1,
-                    "snapshot_id": None,
-                    "sequence_number": n,
-                    "data_file": dfile,
-                }
-            ],
+            return d.snapshot["snapshot-id"]
+        merged = self._merge_dvs(d.pos_deletes, new_by_path)
+        manifest, _seq, meta_updates = self._stage_update_images(
+            d, matched, set_exprs
         )
         return self._publish_dv_snapshot(
-            meta,
-            base,
-            snapshot,
+            d.meta,
+            d.base,
+            d.snapshot,
             merged,
-            extra_manifests=[(data_manifest, 0)],
+            extra_manifests=[(manifest, 0)],
             operation="overwrite",
             meta_updates=meta_updates,
         )
@@ -4682,135 +4635,22 @@ class IcebergTableReader:
         provably nothing matches."""
         import uuid as _uuidmod
 
-        import pyarrow.parquet as pq
-
         from ..functions import avrocodec
-        from . import skipping
 
-        meta = self.metadata()
-        snap_id = meta["current-snapshot-id"]
-        snapshot = next(
-            s for s in meta["snapshots"] if s["snapshot-id"] == snap_id
-        )
-        data, pos_deletes, eq = self._live_files(snapshot)
-        schema = self._schema_struct(meta)
-        skipping.validate(predicates, [f.name for f in schema.fields])
-        unknown = sorted(set(set_exprs) - set(schema.fieldNames()))
-        if unknown:
-            raise ValueError(f"update_where: unknown columns {unknown}")
-        candidates = self._prune_data_files(data, predicates, meta)
-        if not candidates:
-            return snap_id  # provably nothing to update
-        files = [p for p, _ in candidates]
-        norm = lambda c: F.regexp_replace(c, "^file:/+", "/")  # noqa: E731
-        # ROW LINEAGE (round 9): preserved update — images carry each
-        # row's OLD _row_id materialized (same shape as update_where_dv)
-        lineage = meta.get("next-row-id") is not None
-        scan = self._dml_scan(meta, files, with_lineage_col=lineage)
-        if lineage:
-            rid_df = local_frame(
-                self.spark,
-                [
-                    (p, int(st["first_row_id"]))
-                    for p, (_s, st) in candidates
-                    if st.get("first_row_id") is not None
-                ],
-                "__p string, __first long",
-            )
-            scan = scan.join(F.broadcast(rid_df), "__p", "left").withColumn(
-                "_row_id",
-                F.coalesce(F.col("_row_id"), F.col("__first") + F.col("__pos")),
-            ).drop("__first")
-        if pos_deletes:
-            dels = self._position_deletes(pos_deletes).select(
-                norm(F.col("file_path")).alias("__dp"),
-                F.col("pos").alias("__dpos"),
-            )
-            scan = scan.join(
-                F.broadcast(dels),
-                (F.col("__p") == F.col("__dp"))
-                & (F.col("__pos") == F.col("__dpos")),
-                "left_anti",
-            )
-        if eq:
-            scan = self._apply_eq_deletes_for_dml(scan, eq, meta, candidates)
-        matched = scan.filter(
-            skipping.residual_filter(predicates)
-        ).transform(barrier, eager=True)  # computed once: feeds BOTH staged files
-        # ONE projection: every RHS evaluates against the OLD row
-        updated = matched.select(
-            *[
-                F.expr(set_exprs[f.name]).cast(f.dataType).alias(f.name)
-                if f.name in set_exprs
-                else F.col(f.name)
-                for f in schema.fields
-            ],
-            *([F.col("_row_id")] if lineage else []),
-        )
-        # the position-delete file (spec order: file_path, pos)
-        hits = matched.select(
-            F.concat(F.lit("file://"), F.col("__p")).alias("file_path"),
-            F.col("__pos").alias("pos"),
-        )
-        tmp = os.path.join(self.path, f"_stage_upd_{_uuidmod.uuid4().hex}")
-        hits.repartition(1).sortWithinPartitions(
-            "file_path", "pos"
-        ).write.parquet(tmp)
-        import shutil
-
-        src = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-        n_rows = pq.ParquetFile(os.path.join(tmp, src)).metadata.num_rows
-        if n_rows == 0:
-            shutil.rmtree(tmp, ignore_errors=True)
-            return snap_id  # predicate matched no live row
-        data_dir = os.path.join(self.path, "data")
-        del_file = os.path.join(
-            data_dir, f"delete-{_uuidmod.uuid4().hex}.parquet"
-        )
-        os.makedirs(data_dir, exist_ok=True)
-        os.rename(os.path.join(tmp, src), del_file)
-        shutil.rmtree(tmp, ignore_errors=True)
-
-        data_path = _stage_parquet(
-            self.spark, self.path, updated, fields=self._schema_fields(meta)
-        )
-        # past every eq-delete sequence too: an updated image
-        # re-inserted at n must SURVIVE the strictly-smaller gate
-        seqs = [s for _p, (s, _st) in data] + [e[2] for e in eq]
-        n = (max(seqs) if seqs else 0) + 1
-        meta_dir = os.path.join(self.path, "metadata")
-        data_manifest = os.path.join(
-            meta_dir, f"{_uuidmod.uuid4().hex}-m0.avro"
-        )
-        dfile = {
-            "content": 0,
-            "file_path": f"file://{data_path}",
-            "file_format": "PARQUET",
-            "record_count": n_rows,
-            "file_size_in_bytes": os.path.getsize(data_path),
-            "equality_ids": None,
-        }
-        m_schema = _MANIFEST_V2_SCHEMA
-        meta_updates = None
-        if lineage:
-            first = int(meta["next-row-id"])
-            dfile["first_row_id"] = first
-            meta_updates = {"next-row-id": first + n_rows}
-            m_schema = _with_first_row_id_field(_MANIFEST_V2_SCHEMA)
-        avrocodec.write_container(
-            data_manifest,
-            m_schema,
-            [
-                {
-                    "status": 1,
-                    "snapshot_id": None,
-                    "sequence_number": n,
-                    "data_file": dfile,
-                }
-            ],
+        d = self._dml_matches("update_where", predicates, set_exprs)
+        if d.matched is None:
+            return d.snapshot["snapshot-id"]
+        # computed once: feeds BOTH staged files
+        matched = d.matched.transform(barrier, eager=True)
+        staged = self._stage_position_deletes(matched)
+        if staged is None:
+            return d.snapshot["snapshot-id"]  # no live row matched
+        del_file, n_rows = staged
+        data_manifest, n, meta_updates = self._stage_update_images(
+            d, matched, set_exprs
         )
         del_manifest = os.path.join(
-            meta_dir, f"{_uuidmod.uuid4().hex}-d0.avro"
+            self.path, "metadata", f"{_uuidmod.uuid4().hex}-d0.avro"
         )
         avrocodec.write_container(
             del_manifest,
@@ -5063,62 +4903,29 @@ class IcebergTableReader:
             rec = st.get("partition") or {}
             key = _json.dumps(rec, sort_keys=True, default=str)
             groups.setdefault(key, (rec, []))[1].append(p)
-        norm = lambda c: F.regexp_replace(c, "^file:/+", "/")  # noqa: E731
         out_cols = [f.name for f in self._schema_struct(meta).fields] + (
             ["_row_id", "_last_updated_sequence_number"] if lineage else []
         )
         staged: list[tuple[str, dict]] = []
         for key in sorted(groups):
             rec, files = groups[key]
-            cand = [(p, data_map[p]) for p in sorted(files)]
-            scan = self._dml_scan(
-                meta, sorted(files), with_lineage_col=lineage
+            scan = self._live_rows(
+                meta,
+                [(p, data_map[p]) for p in sorted(files)],
+                pos_deletes,
+                eq,
+                lineage,
             )
-            if pos_deletes:
-                dels = self._position_deletes(pos_deletes).select(
-                    norm(F.col("file_path")).alias("__dp"),
-                    F.col("pos").alias("__dpos"),
-                )
-                scan = scan.join(
-                    F.broadcast(dels),
-                    (F.col("__p") == F.col("__dp"))
-                    & (F.col("__pos") == F.col("__dpos")),
-                    "left_anti",
-                )
-            if eq:
-                scan = self._apply_eq_deletes_for_dml(
-                    scan, eq, meta, cand
-                )
             if lineage:
-                rid_df = local_frame(
-                    self.spark,
-                    [
-                        (p, int(st["first_row_id"]), int(s))
-                        for p, (s, st) in cand
-                        if st.get("first_row_id") is not None
-                    ],
-                    "__p string, __first long, __fseq long",
-                )
-                scan = (
-                    scan.join(F.broadcast(rid_df), "__p", "left")
-                    .withColumn(
-                        "_row_id",
-                        F.coalesce(
-                            F.col("_row_id"),
-                            F.col("__first") + F.col("__pos"),
-                        ),
-                    )
-                    # a compaction is NOT an update: the rewrite
-                    # materializes each row's original last-updated
-                    # sequence (spec v3 rewrite obligation)
-                    .withColumn(
-                        "_last_updated_sequence_number",
-                        F.coalesce(
-                            F.col("_last_updated_sequence_number"),
-                            F.col("__fseq"),
-                        ),
-                    )
-                    .drop("__first", "__fseq")
+                # a compaction is NOT an update: the rewrite
+                # materializes each row's original last-updated
+                # sequence (spec v3 rewrite obligation)
+                scan = scan.withColumn(
+                    "_last_updated_sequence_number",
+                    F.coalesce(
+                        F.col("_last_updated_sequence_number"),
+                        F.col("__fseq"),
+                    ),
                 )
             staged_path = _stage_parquet(
                 self.spark,
@@ -5827,7 +5634,6 @@ class IcebergTableReader:
             return None
         scan_schema = self._scan_schema(meta)
         schema = self._schema_struct(meta)
-        norm = lambda c: F.regexp_replace(c, "^file:/+", "/")  # noqa: E731
         cols = [f.name for f in schema.fields]
         seq_prev = {p: st for p, st in d_prev}
         snap_id = int(cur_s["snapshot-id"])
@@ -5840,10 +5646,9 @@ class IcebergTableReader:
                 meta, list(paths), scan_schema, with_pos=True
             )
 
-        def tombstones(del_files):
-            return self._position_deletes(sorted(del_files)).select(
-                norm(F.col("file_path")).alias("__dp"),
-                F.col("pos").alias("__dpos"),
+        def tombstones(df, del_files, how="left_anti"):
+            return rowlevel.join_tombstones(
+                df, self._position_deletes(sorted(del_files)), how=how
             )
 
         def alive_at_prev(paths):
@@ -5852,12 +5657,7 @@ class IcebergTableReader:
             older equality deletes applied sequence-gated."""
             base = scan_with_pos(paths)
             if p_prev:
-                base = base.join(
-                    F.broadcast(tombstones(p_prev)),
-                    (F.col("__path") == F.col("__dp"))
-                    & (F.col("__pos") == F.col("__dpos")),
-                    "left_anti",
-                )
+                base = tombstones(base, p_prev)
             if e_prev:
                 base = self._attach_seq(
                     base, [(p, seq_prev[p]) for p in paths]
@@ -5877,12 +5677,7 @@ class IcebergTableReader:
             ins = scan_with_pos(added)
             if new_pos:
                 # a row born and tombstoned in the SAME commit nets out
-                ins = ins.join(
-                    F.broadcast(tombstones(new_pos)),
-                    (F.col("__path") == F.col("__dp"))
-                    & (F.col("__pos") == F.col("__dpos")),
-                    "left_anti",
-                )
+                ins = tombstones(ins, new_pos)
             parts.append(tag(ins, "insert"))
         if removed:
             parts.append(tag(alive_at_prev(removed), "delete"))
@@ -5891,12 +5686,7 @@ class IcebergTableReader:
             base = alive_at_prev(survivors)
             dels: DataFrame | None = None
             if new_pos:
-                dels = base.join(
-                    F.broadcast(tombstones(new_pos)),
-                    (F.col("__path") == F.col("__dp"))
-                    & (F.col("__pos") == F.col("__dpos")),
-                    "left_semi",
-                )
+                dels = tombstones(base, new_pos, how="left_semi")
             if new_eq:
                 eq_base = self._attach_seq(
                     base, [(p, seq_prev[p]) for p in survivors]

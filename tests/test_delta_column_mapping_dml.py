@@ -279,3 +279,21 @@ def test_mapped_restore_roundtrip(spark, tmp_path):
     assert r.read().count() == 600
     r.restore(0)
     assert r.read().count() == 1200
+
+
+def test_mapped_partitioned_optimize_keeps_partitions(spark, tmp_path):
+    """partitionValues keys are PHYSICAL under column mapping:
+    compaction must group files by them, or every partition's small
+    files pack into one file that carries a single partition's
+    values."""
+    path = str(tmp_path / "t")
+    create_column_mapped_table(
+        spark, path, _df(spark).repartition(4), partition_by=["p"]
+    )
+    r = DeltaLogReader(spark, path)
+    r.optimize()
+    got = r.read()
+    assert got.filter(F.col("k") % 3 != F.col("p")).count() == 0
+    assert sorted(
+        (x.p, x["count"]) for x in got.groupBy("p").count().collect()
+    ) == [(0, 400), (1, 400), (2, 400)]

@@ -194,3 +194,39 @@ def test_random_dml_chain_matches_model_and_feed(spark, tmp_path):
         got_s = sorted((skey(x), x.n, x.sv) for x in streamed.collect())
         want_s = sorted((skey(x), x.n, x.sv) for x in batch.collect())
         assert got_s == want_s, f"seed {seed}: CDF stream diverged"
+
+
+def test_dv_dml_chain_matches_model(spark, tmp_path):
+    """Default-tier twin of the chain above: one seed, a small table
+    and four ops that cover both the copy-on-write and the
+    deletion-vector paths; checks only that the table state equals
+    the dict model."""
+    rng = random.Random(5)
+    n = 60
+    base = spark.range(0, n).select(
+        F.col("id").alias("k"),
+        (F.col("id") % 3).cast("int").alias("p"),
+        (F.col("id") * 10).alias("v"),
+    )
+    path = str(tmp_path / "t")
+    create_minimal_table(
+        spark, path, base.repartitionByRange(3, "k"), stats=True, cdf=True
+    )
+    r = DeltaLogReader(spark, path)
+    model = {k: (k % 3, k * 10) for k in range(n)}
+    # copy-on-write ops first: once the table carries vectors, plain
+    # update_where / delete_where route to the vector paths themselves
+    for op in ["update", "delete", "delete_dv", "update_dv"]:
+        lo = rng.randrange(0, n)
+        hi = lo + rng.randrange(1, 20)
+        preds = [("k", ">=", lo), ("k", "<", hi)]
+        if op.startswith("update"):
+            add = rng.randrange(1, 9)
+            upd = r.update_where_dv if op == "update_dv" else r.update_where
+            upd(preds, {"v": f"v + {add}"})
+            _apply_update(model, lo, hi, add)
+        else:
+            dele = r.delete_where_dv if op == "delete_dv" else r.delete_where
+            dele(preds)
+            _apply_delete(model, lo, hi)
+    assert _table_rows(r) == model
