@@ -109,50 +109,25 @@ def user_norms(ratings: DataFrame) -> DataFrame:
     )
 
 
-def user_cosine_similarities(
-    ratings: DataFrame, broadcast_norms: bool = True
-) -> DataFrame:
-    """J5 — all-pairs user cosine similarity as a sparse self-join.
+def _cosine_both_ways(dots: DataFrame, ratings: DataFrame) -> DataFrame:
+    """The cosine tail every similarity path shares: (user_a, user_b,
+    dot) rows with user_a < user_b become rounded cosines
+    dot / (‖r_a‖·‖r_b‖) over the FULL ratings' norms, emitted in both
+    pair directions.
 
-    sim(u,v) = Σ_i r_ui·r_vi / (‖r_u‖·‖r_v‖), computed only for pairs
-    that co-rate ≥1 item (absent pairs have sim 0 and are never
-    materialized — the sparsity win over np.corrcoef's dense matrix).
-    Emits both (u,v) and (v,u) so downstream k-NN is a plain window.
-
-    `broadcast_norms` (default True): the norms frame is two columns
-    bounded by the ACTIVE-user dictionary — orders of magnitude
-    smaller than the pair stream it joins — but it hangs off a
-    checkpoint LogicalRDD whose stats are unknown, so Catalyst plans
-    a sort-merge join that re-shuffles the O(Σ n_i²) pair stream
-    twice (measured ~0.3s of cf_knn_pruned's main job at sf0.1). The
-    hint restores the plan a stats-aware cluster would pick. Set
-    False only when the user dictionary itself is too large to
-    broadcast (≳10⁸ users) — the SMJ fallback is the correct shape
-    there."""
-    a = ratings.select(
-        F.col("user_id").alias("user_a"),
-        F.col("item_id").alias("item_id"),
-        F.col("rating").alias("rating_a"),
-    )
-    b = ratings.select(
-        F.col("user_id").alias("user_b"),
-        F.col("item_id").alias("item_id"),
-        F.col("rating").alias("rating_b"),
-    )
-    dots = (
-        a.join(b, "item_id")
-        .filter(F.col("user_a") < F.col("user_b"))
-        .groupBy("user_a", "user_b")
-        .agg(F.sum(F.col("rating_a") * F.col("rating_b")).alias("dot"))
-    )
-    # r13: the round-12 norms localCheckpoint was reverted here too —
-    # same structure as the pruned path, where the paired A/B showed
-    # the barrier job costs more than the duplicated plan branch (AQE
-    # stage dedup runs the user_id exchange once at runtime). See
-    # user_cosine_similarities_pruned for the numbers.
-    norms = user_norms(ratings)
-    if broadcast_norms:
-        norms = F.broadcast(norms)
+    The norms frame is two columns bounded by the ACTIVE-user
+    dictionary — orders of magnitude smaller than the pair stream it
+    joins — but it can hang off a checkpoint LogicalRDD whose stats are
+    unknown, so Catalyst would plan a sort-merge join that re-shuffles
+    the O(Σ n_i²) pair stream twice (measured ~0.3s of cf_knn_pruned's
+    main job at sf0.1). The broadcast hint restores the plan a
+    stats-aware cluster would pick. na/nb are two plan branches
+    Catalyst does not CSE, but a barrier on the norms lost the r13
+    paired cold-weather A/B (plain best 2.70s / median 2.98s vs
+    3.25/3.31 checkpointed at 32 cores, a tie at 8): AQE stage dedup
+    already runs the canonically-equal user_id exchange once, so only
+    the tiny final agg + broadcast build run twice."""
+    norms = F.broadcast(user_norms(ratings))
     na = norms.select(F.col("user_id").alias("user_a"), F.col("norm").alias("norm_a"))
     nb = norms.select(F.col("user_id").alias("user_b"), F.col("norm").alias("norm_b"))
     sims = (
@@ -170,12 +145,8 @@ def user_cosine_similarities(
     # branches), doubling the join work
     both = F.explode(
         F.array(
-            F.struct(
-                F.col("user_a").alias("ua"), F.col("user_b").alias("ub"), F.col("sim")
-            ),
-            F.struct(
-                F.col("user_b").alias("ua"), F.col("user_a").alias("ub"), F.col("sim")
-            ),
+            F.struct(F.col("user_a").alias("ua"), F.col("user_b").alias("ub"), F.col("sim")),
+            F.struct(F.col("user_b").alias("ua"), F.col("user_a").alias("ub"), F.col("sim")),
         )
     )
     return sims.select(both.alias("p")).select(
@@ -183,12 +154,36 @@ def user_cosine_similarities(
     )
 
 
+def user_cosine_similarities(ratings: DataFrame) -> DataFrame:
+    """J5 — all-pairs user cosine similarity as a sparse self-join.
+
+    sim(u,v) = Σ_i r_ui·r_vi / (‖r_u‖·‖r_v‖), computed only for pairs
+    that co-rate ≥1 item (absent pairs have sim 0 and are never
+    materialized — the sparsity win over np.corrcoef's dense matrix).
+    Emits both (u,v) and (v,u) so downstream k-NN is a plain window."""
+    a = ratings.select(
+        F.col("user_id").alias("user_a"),
+        F.col("item_id").alias("item_id"),
+        F.col("rating").alias("rating_a"),
+    )
+    b = ratings.select(
+        F.col("user_id").alias("user_b"),
+        F.col("item_id").alias("item_id"),
+        F.col("rating").alias("rating_b"),
+    )
+    dots = (
+        a.join(b, "item_id")
+        .filter(F.col("user_a") < F.col("user_b"))
+        .groupBy("user_a", "user_b")
+        .agg(F.sum(F.col("rating_a") * F.col("rating_b")).alias("dot"))
+    )
+    return _cosine_both_ways(dots, ratings)
+
+
 def user_cosine_similarities_pruned(
     ratings: DataFrame,
     min_overlap: int = 2,
     max_item_raters: int | None = None,
-    broadcast_norms: bool = True,
-    materialize_norms: bool = False,
 ) -> DataFrame:
     """The scale variant of user_cosine_similarities (SURVEY.md §4 risk
     #1): prune the quadratic pair stream before it exists.
@@ -233,44 +228,8 @@ def user_cosine_similarities_pruned(
         )
         .filter(F.col("overlap") >= min_overlap)
     )
-    # norms over the FULL ratings, like the exact path. The round-12
-    # localCheckpoint barrier here (na/nb are two plan branches and
-    # Catalyst does not CSE them) was put ON PROBATION by the r12
-    # judge and REVERTED in r13 on paired cold-weather A/B evidence:
-    # plain norms won at 32 cores (best 2.70s / median 2.98s vs
-    # 3.25/3.31 checkpointed, 5/5 surviving probe-bracketed rounds)
-    # and tied at 8 cores — the barrier's extra job + block write
-    # costs more than the duplicated plan branch, because AQE stage
-    # dedup already computes the canonically-equal user_id exchange
-    # once at runtime; only the tiny final agg + broadcast build run
-    # twice. `materialize_norms=True` restores the barrier for
-    # deployments where the ratings subtree is expensive enough to
-    # dominate (it is NOT, locally or at bench scale).
-    norms = user_norms(ratings)
-    if materialize_norms:
-        norms = norms.transform(barrier)
-    if broadcast_norms:
-        norms = F.broadcast(norms)  # see user_cosine_similarities docstring
-    na = norms.select(F.col("user_id").alias("user_a"), F.col("norm").alias("norm_a"))
-    nb = norms.select(F.col("user_id").alias("user_b"), F.col("norm").alias("norm_b"))
-    sims = (
-        dots.join(na, "user_a")
-        .join(nb, "user_b")
-        .select(
-            "user_a",
-            "user_b",
-            F.round(F.col("dot") / (F.col("norm_a") * F.col("norm_b")), SIM_SCALE).alias("sim"),
-        )
-    )
-    both = F.explode(
-        F.array(
-            F.struct(F.col("user_a").alias("ua"), F.col("user_b").alias("ub"), F.col("sim")),
-            F.struct(F.col("user_b").alias("ua"), F.col("user_a").alias("ub"), F.col("sim")),
-        )
-    )
-    return sims.select(both.alias("p")).select(
-        F.col("p.ua").alias("user_a"), F.col("p.ub").alias("user_b"), F.col("p.sim").alias("sim")
-    )
+    # norms over the FULL ratings, like the exact path
+    return _cosine_both_ways(dots, ratings)
 
 
 def dimsum_sampled_ratings(
@@ -339,7 +298,6 @@ def rescore_pairs(
     candidates: DataFrame,
     ratings: DataFrame,
     min_overlap: int = 1,
-    broadcast_norms: bool = True,
 ) -> DataFrame:
     """Exact cosine over the candidate pairs ONLY — the verification
     half of the sketch twin. Joins each candidate pair back to the
@@ -364,31 +322,7 @@ def rescore_pairs(
         )
         .filter(F.col("overlap") >= min_overlap)
     )
-    norms = user_norms(ratings)
-    if broadcast_norms:
-        norms = F.broadcast(norms)  # see user_cosine_similarities docstring
-    na = norms.select(F.col("user_id").alias("user_a"), F.col("norm").alias("norm_a"))
-    nb = norms.select(F.col("user_id").alias("user_b"), F.col("norm").alias("norm_b"))
-    sims = (
-        dots.join(na, "user_a")
-        .join(nb, "user_b")
-        .select(
-            "user_a",
-            "user_b",
-            F.round(F.col("dot") / (F.col("norm_a") * F.col("norm_b")), SIM_SCALE).alias(
-                "sim"
-            ),
-        )
-    )
-    both = F.explode(
-        F.array(
-            F.struct(F.col("user_a").alias("ua"), F.col("user_b").alias("ub"), F.col("sim")),
-            F.struct(F.col("user_b").alias("ua"), F.col("user_a").alias("ub"), F.col("sim")),
-        )
-    )
-    return sims.select(both.alias("p")).select(
-        F.col("p.ua").alias("user_a"), F.col("p.ub").alias("user_b"), F.col("p.sim").alias("sim")
-    )
+    return _cosine_both_ways(dots, ratings)
 
 
 def knn_neighbors(similarities: DataFrame, k: int) -> DataFrame:

@@ -270,7 +270,6 @@ def lsh_near_dup_pairs(
     seed: int = 42,
     id_col: str = "vec_id",
     repro: bool = False,
-    pair_dedup: str = "distinct",
 ) -> DataFrame:
     """Scale path for embedding-cosine near-dup (SemDeDup-style): LSH
     band buckets generate candidate pairs via an equi-join on
@@ -292,78 +291,24 @@ def lsh_near_dup_pairs(
     # returned plan is GC'd, so long sessions (the external driver, full
     # sweeps) don't accumulate CacheManager entries (ADVICE r2).
     bander = with_lsh_bands_repro if repro else with_lsh_bands
-    if pair_dedup == "minband":
-        # minband needs the full band-key arrays and the band index on
-        # the checkpointed frame; the default path deliberately does
-        # NOT carry them — the checkpoint is an RDD, so Catalyst
-        # cannot column-prune the arrays away for consumers that never
-        # read them.
-        banded = (
-            bander(emb, dim, n_planes, n_bands, seed)
-            .select(F.col(id_col), "bands", F.posexplode("bands").alias("bi", "bk"))
-            .transform(barrier)
-        )
-        a = banded.select(
-            F.col(id_col).alias("vec_a"), F.col("bands").alias("bands_a"), "bi", "bk"
-        )
-        b = banded.select(
-            F.col(id_col).alias("vec_b"), F.col("bands").alias("bands_b"), "bk"
-        )
-        # r13 (guide §2.4, VERDICT r12 item 6): candidate dedup WITHOUT
-        # the dropDuplicates exchange. A pair colliding in k bands
-        # appears k times in the band join; instead of shuffling the
-        # whole pair stream to keep one, keep the row iff this is the
-        # pair's FIRST colliding band — decidable row-locally because
-        # both sides carry their full band-key arrays (n_bands longs,
-        # a few dozen bytes) and band keys embed the band id, so the
-        # bk equi-join already matches same-band keys only. Identical
-        # pair set by construction (each pair survives exactly at its
-        # minimum colliding band); pinned row-identical to the
-        # distinct form in tests/test_r13_optimizations.py.
-        #
-        # MEASURED SLOWER at bench scale and therefore NOT the
-        # default: 3.4-3.6s vs 2.0-2.3s for the full query at sf0.1
-        # (3 runs each; an exists/zip_with HOF form read 5.2s). At
-        # this SF the banded sides broadcast, so the bk join has no
-        # exchange to begin with and dropDuplicates moves only
-        # 459k x 16 B — while minband widens the banded blocks and
-        # the join stream by 2 x n_bands longs per row. The byte
-        # accounting flips where candidates explode: the distinct
-        # form shuffles O(candidate pairs) rows, minband adds only
-        # O(n_vec x n_bands x 32 B) to the band-join shuffle — on a
-        # corpus where Σ bucket² >> n_vec (hot LSH buckets at 100 TB)
-        # the opt-in is the right shape.
-        # flat boolean expansion (n_bands is a plan-time constant):
-        # keep iff for every j < bi, bands_a[j] != bands_b[j]. A
-        # zip_with/exists HOF form of the same predicate was measured
-        # 2x SLOWER than the dropDuplicates it replaces (interpreted
-        # lambda + array allocs per joined row); plain getItem
-        # comparisons stay inside WholeStageCodegen.
-        no_earlier = F.lit(True)
-        for j in range(n_bands - 1):
-            no_earlier = no_earlier & (
-                (F.col("bi") <= j)
-                | (F.col("bands_a").getItem(j) != F.col("bands_b").getItem(j))
-            )
-        cands = (
-            a.join(b, "bk")
-            .filter((F.col("vec_a") < F.col("vec_b")) & no_earlier)
-            .select("vec_a", "vec_b")
-        )
-    else:
-        banded = (
-            bander(emb, dim, n_planes, n_bands, seed)
-            .select(F.col(id_col), F.explode("bands").alias("bk"))
-            .transform(barrier)
-        )
-        a = banded.select(F.col(id_col).alias("vec_a"), "bk")
-        b = banded.select(F.col(id_col).alias("vec_b"), "bk")
-        cands = (
-            a.join(b, "bk")
-            .filter(F.col("vec_a") < F.col("vec_b"))
-            .select("vec_a", "vec_b")
-            .dropDuplicates(["vec_a", "vec_b"])
-        )
+    banded = (
+        bander(emb, dim, n_planes, n_bands, seed)
+        .select(F.col(id_col), F.explode("bands").alias("bk"))
+        .transform(barrier)
+    )
+    a = banded.select(F.col(id_col).alias("vec_a"), "bk")
+    b = banded.select(F.col(id_col).alias("vec_b"), "bk")
+    # A pair colliding in k bands appears k times in the band join;
+    # dropDuplicates keeps one. (A row-local "first colliding band"
+    # filter avoids that exchange but widens every banded row by the
+    # full band-key array, and measured slower: 3.4-3.6s vs 2.0-2.3s
+    # for the full query at sf0.1.)
+    cands = (
+        a.join(b, "bk")
+        .filter(F.col("vec_a") < F.col("vec_b"))
+        .select("vec_a", "vec_b")
+        .dropDuplicates(["vec_a", "vec_b"])
+    )
     vn = with_norm(emb)
     va = vn.select(
         F.col(id_col).alias("vec_a"), F.col("_v").alias("va"), F.col("_norm").alias("na")

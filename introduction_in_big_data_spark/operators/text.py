@@ -228,13 +228,7 @@ def pack_token_shards(
 # item 2): below this many input bytes the duplicate corpus scan is
 # cheaper than the checkpoint's extra planning + block write + lost
 # hash(doc) partitioning; above it the single-scan shape wins.
-# Env-parameterised so a cluster deployment can tune it without code.
-def _tfidf_tf_materialize_min_bytes() -> int:
-    import os
-
-    return int(
-        os.environ.get("SPARK_GRAFT_TFIDF_TF_MATERIALIZE_MIN_BYTES", 256 << 20)
-    )
+_TFIDF_TF_BARRIER_MIN_BYTES = 256 << 20
 
 
 def _input_bytes(df: DataFrame) -> int | None:
@@ -260,9 +254,7 @@ def tfidf_top_terms(
     id_col: str,
     text_col: str,
     k: int = 3,
-    broadcast_df: bool = True,
     doc_partitions: int | None = 16,
-    materialize_tf: bool | None = None,
 ) -> DataFrame:
     """Top-k TF-IDF terms per document — the classic corpus-analysis
     ranking (what "characterizes" each doc against the collection).
@@ -277,11 +269,8 @@ def tfidf_top_terms(
     so neither inserts another exchange. df(t) comes from a
     groupBy(term) count whose exchange carries only map-side PARTIAL
     aggregates (one row per (task, term) — never the pair stream) and
-    joins back by BROADCAST (`broadcast_df=True`, the cf.py
-    broadcast_norms trade: a (term, df) dictionary is fine to ~10⁷
-    unique terms; for open-web-scale vocabularies pass
-    broadcast_df=False and df(t) reverts to a term-partitioned
-    window — scale-safe, one extra pair shuffle). Old plan: THREE
+    joins back by BROADCAST (the cf.py broadcast-norms trade: a
+    (term, df) dictionary is fine to ~10⁷ unique terms). Old plan: THREE
     pair-stream shuffles (token groupBy, term window, doc window);
     new plan: one, plus the tiny dictionary exchange. Measured sf1:
     1.31s → 1.07s; the same-session DuckDB-cold ratio drops 3.2× →
@@ -316,38 +305,26 @@ def tfidf_top_terms(
     )
     tf = tok.groupBy("doc", "term").agg(F.count(F.lit(1)).alias("tf"))
     n_docs = df.select(F.count(F.lit(1)).alias("n_docs"))
-    if broadcast_df:
-        # tf feeds two consumers (the term-dictionary group-by and the
-        # scoring join) and Catalyst does not CSE them: without a
-        # barrier the whole tokenize → explode → repartition → tf
-        # aggregate pipeline appears TWICE in the plan (round 12;
-        # visible as two parquet scans each with its own Generate and
-        # doc Exchange). Materializing tf once (lazy localCheckpoint)
-        # trades that duplicate scan for: the checkpoint's eager
-        # physical planning at build time, a block write, and the
-        # LogicalRDD losing hash(doc) partitioning so the top-k window
-        # re-shuffles tf. Below ~hundreds of MB of corpus the
-        # duplicate scan is the cheaper side (driver r12 measured the
-        # barrier 2.2x slower at sf0.1); at scale the single-scan
-        # shape wins because the corpus scan dominates everything
-        # else. `materialize_tf=None` (auto) keys the choice on the
-        # input file bytes — frames without file lineage get the
-        # barrier, the scale-safe default for opaque inputs.
-        if materialize_tf is None:
-            nbytes = _input_bytes(df)
-            materialize_tf = (
-                nbytes is None or nbytes >= _tfidf_tf_materialize_min_bytes()
-            )
-        if materialize_tf:
-            tf = tf.transform(barrier)
-        counts = tf.groupBy("term").agg(
-            F.count(F.lit(1)).alias("dfreq")
-        )
-        with_df = tf.join(F.broadcast(counts), "term")
-    else:
-        with_df = tf.withColumn(
-            "dfreq", F.count(F.lit(1)).over(Window.partitionBy("term"))
-        )
+    # tf feeds two consumers (the term-dictionary group-by and the
+    # scoring join) and Catalyst does not CSE them: without a barrier
+    # the whole tokenize → explode → repartition → tf aggregate
+    # pipeline appears TWICE in the plan (round 12; visible as two
+    # parquet scans each with its own Generate and doc Exchange).
+    # Materializing tf once (lazy barrier) trades that duplicate scan
+    # for: the checkpoint's eager physical planning at build time, a
+    # block write, and the LogicalRDD losing hash(doc) partitioning so
+    # the top-k window re-shuffles tf. Below ~hundreds of MB of corpus
+    # the duplicate scan is the cheaper side (driver r12 measured the
+    # barrier 2.2x slower at sf0.1); at scale the single-scan shape
+    # wins because the corpus scan dominates everything else. The
+    # choice keys on the input file bytes — frames without file
+    # lineage get the barrier, the scale-safe default for opaque
+    # inputs.
+    nbytes = _input_bytes(df)
+    if nbytes is None or nbytes >= _TFIDF_TF_BARRIER_MIN_BYTES:
+        tf = tf.transform(barrier)
+    counts = tf.groupBy("term").agg(F.count(F.lit(1)).alias("dfreq"))
+    with_df = tf.join(F.broadcast(counts), "term")
     scored = with_df.crossJoin(F.broadcast(n_docs)).select(
         "doc",
         "term",
@@ -404,90 +381,10 @@ def _char_grams_sql(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def _char_grams_arrow(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(doc, gram, cnt) via a mapInPandas numpy kernel (round 10,
-    VERDICT r9 item 1): each text is encoded utf-32-le and viewed as a
-    uint32 code-point array; a stride-tricks sliding window yields the
-    (n-2, 3) trigram matrix for the whole doc with zero copies; all
-    docs in the Arrow batch are stacked with a doc-index column into
-    one (M, 4) uint32 matrix and a SINGLE np.unique(void-view) call
-    produces the per-(doc, gram) counts for the batch. Unique grams
-    decode back to str in one bulk utf-32-le decode. Character (code
-    point) semantics match Spark substring / Python slicing exactly,
-    so output is row-identical to _char_grams_sql (pinned by pytest).
-
-    Same shuffle shape as the SQL kernel (none — per-input-partition
-    work only); the difference is numpy's radix-ish sort over 16-byte
-    records vs the JVM's materialize-then-sort of string arrays."""
-    import numpy as np
-    import pandas as pd
-
-    id_type = df.schema[id_col].dataType.simpleString()
-
-    def kernel(batches):
-        for pdf in batches:
-            texts = pdf[text_col].fillna("")
-            # ONE encode for the whole batch: concatenated code points
-            cp = np.frombuffer(
-                "".join(texts).encode("utf-32-le", "surrogatepass"), dtype="<u4"
-            )
-            if cp.size < 3:
-                continue
-            lens = texts.str.len().to_numpy(dtype=np.int64)
-            ends = np.cumsum(lens)
-            w = np.lib.stride_tricks.sliding_window_view(cp, 3)
-            # window i starts at global code-point position i; it
-            # belongs to the doc containing i and survives iff all 3
-            # chars sit inside that doc (i <= end-3). Zero-length docs
-            # are skipped naturally by side="right".
-            pos = np.arange(w.shape[0])
-            docix = np.searchsorted(ends, pos, side="right")
-            keep = pos <= ends[docix] - 3
-            w = w[keep]
-            docix = docix[keep]
-            if not w.shape[0]:
-                continue
-            # code points < 2^21, so a trigram packs into 63 bits;
-            # factorize the packed grams (few uniques vs windows) and
-            # hash-count a single combined int64 key — one O(M) pass,
-            # no 16-byte record sort (measured 6x over per-doc
-            # np.unique on the x10 partition workload)
-            packed = (
-                (w[:, 0].astype(np.int64) << 42)
-                | (w[:, 1].astype(np.int64) << 21)
-                | w[:, 2].astype(np.int64)
-            )
-            codes, uniq = pd.factorize(packed, sort=False)
-            kvc = pd.Series(
-                docix.astype(np.int64) * len(uniq) + codes
-            ).value_counts(sort=False)
-            kk = kvc.index.to_numpy()
-            up = uniq[kk % len(uniq)]
-            tri = np.empty((up.size, 3), dtype="<u4")
-            tri[:, 0] = (up >> 42) & 0x1FFFFF
-            tri[:, 1] = (up >> 21) & 0x1FFFFF
-            tri[:, 2] = up & 0x1FFFFF
-            s = tri.tobytes().decode("utf-32-le", "surrogatepass")
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].to_numpy()[kk // len(uniq)],
-                    "g": [s[3 * i : 3 * i + 3] for i in range(up.size)],
-                    "cnt": kvc.to_numpy(dtype=np.int64),
-                }
-            )
-
-    return df.select(id_col, text_col).mapInPandas(
-        kernel, f"{id_col} {id_type}, g string, cnt long"
-    )
-
-
 def char_lm_scores(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    materialize_grams: bool | None = None,
-    gram_kernel: str = "sql",
-    materialize_counts: bool = True,
 ) -> DataFrame:
     """Statistical LM quality scoring (round 3): train a character-
     trigram language model ON the corpus and score every document by
@@ -516,44 +413,18 @@ def char_lm_scores(
     junk, wrong-language text) — the standard cut for corpus curation.
     Documents shorter than 3 chars emit no grams and no row.
 
-    `materialize_grams`: the (doc, gram, cnt) frame feeds both the
-    dictionary group-by and the scoring join, and Catalyst does not
-    CSE the two subtrees — without materialization the tokenize+
-    explode+pre-aggregate runs twice. Lazy localCheckpoint computes it
-    once; blocks freed by ContextCleaner. (Trade-off: checkpointed
-    blocks drop lineage — executor loss on a real cluster means job
-    failure, not recompute; flip to False where that matters.)
-
-    `gram_kernel`: "sql" (in-row sort+RLE, pure JVM codegen) or
-    "arrow" (mapInPandas numpy — round-10 kernel, see
-    _char_grams_arrow); identical output, different per-partition CPU
-    profile. Both shuffle-free at the gram stage."""
-    grams = _char_grams_arrow if gram_kernel == "arrow" else _char_grams_sql
-    dg = grams(df, id_col, text_col)
-    # The dg frame feeds two subtrees (dictionary group-by + scoring
-    # join) and Catalyst does not CSE them. For the JVM kernel,
-    # computing it twice costs more than checkpointing 7M rows; for
-    # the arrow kernel the measured tradeoff flips (x10: 3.06s
-    # uncheckpointed vs 3.53s checkpointed — the kernel re-run is
-    # cheaper than materializing its output), so the default
-    # (materialize_grams=None, "auto") checkpoints only the JVM
-    # kernel. Pass an explicit True/False to force either choice —
-    # the calibration ladders use this to measure both arms.
-    if materialize_grams is None:
-        materialize_grams = gram_kernel != "arrow"
-    if materialize_grams:
-        dg = dg.transform(barrier)
+    The (doc, gram, cnt) frame feeds both the dictionary group-by and
+    the scoring join, and Catalyst does not CSE the two subtrees, so a
+    lazy barrier computes it once (computing it twice costs more than
+    checkpointing 7M rows)."""
+    dg = _char_grams_sql(df, id_col, text_col).transform(barrier)
     counts = dg.groupBy("g").agg(F.sum("cnt").alias("c"))
     # counts feeds TWO consumers (the broadcast scoring join and the
     # N/V scalar gate) and Catalyst does not CSE them — without a
     # barrier the whole dictionary group-by over dg runs twice
     # (round 12, guide §2.4). The dictionary is bounded by |charset|³
     # regardless of corpus size, so materializing it is always cheap.
-    # materialize_counts=False restores the r11 duplicate-subtree form
-    # — it exists so the A/B harness can measure both arms (r13
-    # re-proof: see OPTIMIZATION_r13.md).
-    if materialize_counts:
-        counts = counts.transform(barrier)
+    counts = counts.transform(barrier)
     scal = counts.agg(
         F.sum("c").alias("N"), F.count(F.lit(1)).alias("V")
     )

@@ -489,8 +489,7 @@ def text_char_lm_quality(spark, sf_dir):
     # the 2x budget) does not justify a fragile two-threshold window
     # that dispatches a 2x-worse kernel when the host crosses it; the
     # robust plan is ONE kernel, <=2x at every measured xN (SCALE.md
-    # round-12 ladder). The arrow kernel remains available via
-    # char_lm_scores(gram_kernel="arrow") for mid-scale callers.
+    # round-12 ladder).
     # Parallelism stays footprint-adaptive: 0.5x below 2 MB (per-task
     # machinery dominates 5k-doc inputs), 1x above — footprint read
     # from the parquet file size, no job runs.
@@ -513,7 +512,6 @@ def text_char_lm_quality(spark, sf_dir):
         ),
         "doc_id",
         "text",
-        gram_kernel="sql",
     )
 
 

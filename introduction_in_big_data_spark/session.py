@@ -13,6 +13,10 @@ Scale notes (local[N] now, 1000-executor cluster later):
   this should be ~2-3x total executor cores (set via env/extra_conf).
 - Arrow enabled so the few Pandas-UDF operators (multimodal decode,
   CF fallback) move columns in batches, never row-at-a-time pickling.
+- Materialization barriers (`barrier`) use reliable checkpoints on a
+  cluster: set `spark.checkpoint.dir` (e.g. through SPARK_GRAFT_CONF)
+  to a shared path; without it they checkpoint to executor-local
+  storage.
 """
 
 from __future__ import annotations
@@ -33,52 +37,28 @@ def barrier(df, eager: bool = False):
     Several operators compute a frame that feeds 2+ plan branches
     Catalyst cannot CSE (it never canonicalizes RDD scans with distinct
     exprIds equal, and never dedups identical union/join subtrees), so
-    they cut the plan with a barrier that computes the frame once. The
-    lineage-drop trade-off lives HERE, once, instead of at every call
-    site; $SPARK_GRAFT_BARRIER selects the implementation:
+    they cut the plan with a barrier that computes the frame once.
+    Others rely on it to PIN nondeterministic values (partition ids,
+    monotonically_increasing_id, sampled range bounds) between a sizing
+    collect and the final plan. Every barrier therefore materializes
+    and drops lineage, so nothing downstream ever recomputes it:
 
-    - "local" (default): ``localCheckpoint`` — blocks on executor
-      local storage, lineage DROPPED. Cheapest, right for local mode
-      and the bench; on a real cluster executor loss fails the job
-      instead of recomputing.
-    - "reliable": ``checkpoint`` — blocks written to the checkpoint
-      dir (set ``spark.checkpoint.dir`` or call ``setCheckpointDir``;
-      SPARK_GRAFT_CHECKPOINT_DIR is applied if the dir is unset).
-      Survives executor loss — the 100 TB deployment setting.
-    - "cache": ``persist`` — KEEPS lineage (loss triggers recompute)
-      but entries stay in CacheManager until unpersist, so identical
-      plans from later invocations can silently hit them (ADVICE r2);
-      prefer reliable on long-lived sessions.
-    - "none": no barrier — the duplicated-subtree cost comes back;
-      useful only to measure it.
+    - the SparkContext has a checkpoint dir (``spark.checkpoint.dir``,
+      or ``setCheckpointDir``): reliable ``checkpoint``, blocks written
+      under that dir, surviving executor loss — the cluster setting;
+    - otherwise ``localCheckpoint``: blocks on executor local storage.
+      Cheapest, right for local mode; on a cluster, executor loss
+      fails the job instead of recomputing.
+
+    Nothing else is selectable: there is no cache or no-barrier mode.
 
     ``eager=False`` keeps today's lazy semantics: the first action
     that touches the frame materializes it. Iterative algorithms
     (connected components) pass eager=True to truncate lineage NOW.
     """
-    mode = os.environ.get("SPARK_GRAFT_BARRIER", "local")
-    if mode == "local":
+    if df.sparkSession.sparkContext.getCheckpointDir() is None:
         return df.localCheckpoint(eager=eager)
-    if mode == "reliable":
-        sc = df.sparkSession.sparkContext
-        if sc._jsc.sc().getCheckpointDir().isEmpty():
-            ckpt_dir = os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")
-            if not ckpt_dir:
-                raise ValueError(
-                    "SPARK_GRAFT_BARRIER=reliable needs a checkpoint dir: "
-                    "set spark.checkpoint.dir, call setCheckpointDir, or "
-                    "export SPARK_GRAFT_CHECKPOINT_DIR"
-                )
-            sc.setCheckpointDir(ckpt_dir)
-        return df.checkpoint(eager=eager)
-    if mode == "cache":
-        df = df.persist()
-        if eager:
-            df.count()
-        return df
-    if mode == "none":
-        return df
-    raise ValueError(f"unknown SPARK_GRAFT_BARRIER mode: {mode!r}")
+    return df.checkpoint(eager=eager)
 
 
 def local_frame(spark: SparkSession, rows, schema) -> DataFrame:

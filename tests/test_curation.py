@@ -144,37 +144,41 @@ def test_char_lm_scores_rank_typicality(spark):
     assert got[3]["n_grams"] == len("qzx#7!vb@kplm&wy") - 2
 
 
-def test_char_gram_kernels_row_identical(spark):
-    """The round-10 arrow (mapInPandas numpy) gram kernel must emit
-    the exact (doc, gram, cnt) rows of the JVM sort+RLE kernel —
-    including unicode, astral-plane (surrogate-pair-in-UTF-16) chars,
-    empty/short docs, nulls, and runs — so the adaptive kernel switch
-    in text_char_lm_quality can never change the driver-oracle answer."""
+def test_char_grams_sql_matches_counter_reference(spark):
+    """The JVM sort+RLE gram kernel emits exactly the (doc, gram, cnt)
+    rows of Python's Counter over text[i:i+3] — code-point semantics
+    on unicode and astral-plane (surrogate-pair-in-UTF-16) chars,
+    empty/short docs, nulls and runs — and char_lm_scores scores
+    exactly the docs with at least one gram."""
+    from collections import Counter
+
     from introduction_in_big_data_spark.operators.text import (
-        _char_grams_arrow,
         _char_grams_sql,
         char_lm_scores,
     )
 
-    docs = spark.createDataFrame(
-        [
-            (1, "the cat sat on the mat " * 7),
-            (2, ""),
-            (3, "ab"),
-            (4, "aaaaaa"),
-            (5, "héllo wörld héllo"),
-            (6, "x\U0001f600\U0001f600yz\U0001f600\U0001f600y"),
-            (7, None),
-            (8, "abc"),
-        ],
-        "doc_id long, text string",
+    texts = {
+        1: "the cat sat on the mat " * 7,
+        2: "",
+        3: "ab",
+        4: "aaaaaa",
+        5: "héllo wörld héllo",
+        6: "x\U0001f600\U0001f600yz\U0001f600\U0001f600y",
+        7: None,
+        8: "abc",
+    }
+    docs = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
+    want = {
+        doc: Counter(t[i : i + 3] for i in range(len(t) - 2))
+        for doc, t in texts.items()
+        if t and len(t) >= 3
+    }
+    got = sorted(map(tuple, _char_grams_sql(docs, "doc_id", "text").collect()))
+    assert got == sorted(
+        (doc, g, c) for doc, grams in want.items() for g, c in grams.items()
     )
-    a = _char_grams_sql(docs, "doc_id", "text")
-    b = _char_grams_arrow(docs, "doc_id", "text")
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-    sa = char_lm_scores(docs, gram_kernel="sql").collect()
-    sb = char_lm_scores(docs, gram_kernel="arrow").collect()
-    assert sorted(map(tuple, sa)) == sorted(map(tuple, sb))
+    scores = {r["doc_id"]: r["n_grams"] for r in char_lm_scores(docs).collect()}
+    assert scores == {doc: sum(grams.values()) for doc, grams in want.items()}
 
 
 def test_epoch_shuffle_deterministic_and_reseeds(spark):

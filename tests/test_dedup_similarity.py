@@ -331,11 +331,12 @@ def test_lsh_band_keys_fast_matches_repro(spark, sf_dir):
 
 
 def test_tfidf_broadcast_and_window_forms_agree(spark):
-    """tfidf_top_terms' scale opt-out (broadcast_df=False — the
-    term-window form for open-web-scale vocabularies) returns
-    row-identical results to the default broadcast-df plan."""
-    from pyspark.sql import functions as F
+    """tfidf_top_terms' broadcast-df plan returns row-identical results
+    to the term-window form (df(t) as a count over a term-partitioned
+    window), written out here as the reference."""
+    from pyspark.sql import Window
 
+    from introduction_in_big_data_spark.functions.textfns import tokens
     from introduction_in_big_data_spark.operators.text import (
         tfidf_top_terms,
     )
@@ -350,8 +351,33 @@ def test_tfidf_broadcast_and_window_forms_agree(spark):
         ],
         "doc_id long, text string",
     )
-    a = tfidf_top_terms(docs, "doc_id", "text", k=2)
-    b = tfidf_top_terms(docs, "doc_id", "text", k=2, broadcast_df=False)
+    k = 2
+    a = tfidf_top_terms(docs, "doc_id", "text", k=k)
+    tf = (
+        docs.select(
+            F.col("doc_id").alias("doc"),
+            F.explode(tokens(F.col("text"))).alias("term"),
+        )
+        .groupBy("doc", "term")
+        .agg(F.count(F.lit(1)).alias("tf"))
+    )
+    n_docs = docs.count()
+    scored = tf.withColumn(
+        "dfreq", F.count(F.lit(1)).over(Window.partitionBy("term"))
+    ).select(
+        "doc",
+        "term",
+        F.round(
+            F.col("tf") * F.log((F.lit(n_docs) + 1.0) / (F.col("dfreq") + 1.0)),
+            6,
+        ).alias("score"),
+    )
+    w = Window.partitionBy("doc").orderBy(F.desc("score"), F.asc("term"))
+    b = (
+        scored.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= k)
+        .select("doc", "term", "score", F.col("rn").cast("int").alias("rn"))
+    )
     rows_a = sorted(map(tuple, a.collect()))
     rows_b = sorted(map(tuple, b.collect()))
     assert rows_a == rows_b

@@ -1,14 +1,15 @@
 """Round-13 optimization pins.
 
-- tfidf's tf barrier is now gated on corpus input bytes (VERDICT r12
+- tfidf's tf barrier is gated on corpus input bytes (VERDICT r12
   item 2): small file-backed corpora keep the partition-preserving
   two-scan shape, opaque/huge inputs get the single-scan barrier. The
-  dispatch and the parity of both arms are pinned here.
-- cf's norms localCheckpoint was reverted (VERDICT r12 item 1) — both
-  arms must stay row-identical so the parameter stays safe to flip.
+  dispatch is pinned here, and the parity of both arms is checked by
+  feeding the same rows once from parquet and once from memory.
+- cf's norms localCheckpoint was reverted (VERDICT r12 item 1): the
+  exact path's plan has no checkpoint scan.
+- session.barrier always pins: localCheckpoint without a checkpoint
+  dir, reliable checkpoint under it when the SparkContext has one.
 """
-
-from pyspark.sql import functions as F
 
 from introduction_in_big_data_spark.operators import cf
 from introduction_in_big_data_spark.operators.text import (
@@ -49,13 +50,26 @@ def test_tfidf_auto_opaque_input_gets_barrier(spark):
     assert "ExistingRDD" in _plan(out)
 
 
-def test_tfidf_barrier_arms_row_identical(spark):
-    d = spark.createDataFrame(DOCS, "doc_id long, text string")
-    a = tfidf_top_terms(d, "doc_id", "text", k=2, materialize_tf=True)
-    b = tfidf_top_terms(d, "doc_id", "text", k=2, materialize_tf=False)
-    assert a.exceptAll(b).count() == 0
-    assert b.exceptAll(a).count() == 0
-    assert a.count() > 0
+def test_tfidf_barrier_arms_row_identical(spark, tmp_path):
+    """The input selects the tf barrier arm: a small parquet-backed
+    corpus runs without it, the same rows in memory run with it. Both
+    return identical rows, and an empty-text doc emits none."""
+    docs = DOCS + [(5, "")]
+    p = str(tmp_path / "docs.parquet")
+    spark.createDataFrame(docs, "doc_id long, text string").write.parquet(p)
+    a = tfidf_top_terms(spark.read.parquet(p), "doc_id", "text", k=2)
+    b = tfidf_top_terms(
+        spark.createDataFrame(docs, "doc_id long, text string"),
+        "doc_id",
+        "text",
+        k=2,
+    )
+    assert "ExistingRDD" not in _plan(a)
+    assert "ExistingRDD" in _plan(b)
+    rows_a = sorted(map(tuple, a.collect()))
+    assert rows_a == sorted(map(tuple, b.collect()))
+    assert rows_a
+    assert not [r for r in rows_a if r[0] == 5]
 
 
 def test_stream_drain_cadence_free_for_complete_agg(spark, sf_dir):
@@ -80,31 +94,6 @@ def test_stream_drain_cadence_free_for_complete_agg(spark, sf_dir):
     assert uncapped.count() > 0
 
 
-def test_lsh_pair_dedup_forms_identical(spark):
-    """lsh_near_dup_pairs' minband candidate dedup (opt-in scale form)
-    must produce exactly the distinct-form pair set — each pair kept
-    once, at its minimum colliding band, same sims."""
-    import numpy as np
-
-    from introduction_in_big_data_spark.operators.similarity import (
-        lsh_near_dup_pairs,
-    )
-
-    rng = np.random.default_rng(7)
-    base = rng.normal(size=(40, 8))
-    rows = []
-    for i, v in enumerate(base):
-        rows.append((i, [float(x) for x in v]))
-        # near-dup twin so real pairs exist
-        rows.append((1000 + i, [float(x) for x in v + rng.normal(scale=1e-3, size=8)]))
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    a = lsh_near_dup_pairs(emb, threshold=0.8, dim=8, pair_dedup="minband")
-    b = lsh_near_dup_pairs(emb, threshold=0.8, dim=8, pair_dedup="distinct")
-    assert a.exceptAll(b).count() == 0
-    assert b.exceptAll(a).count() == 0
-    assert b.count() > 0
-
-
 RATINGS = [
     (1, 10, 4.0), (1, 11, 2.0), (1, 12, 5.0),
     (2, 10, 3.0), (2, 11, 1.0), (2, 13, 4.0),
@@ -113,46 +102,31 @@ RATINGS = [
 ]
 
 
-def test_cf_norms_barrier_arms_row_identical(spark):
-    """materialize_norms=True (the reverted r12 barrier) and the new
-    default False must produce identical similarity rows."""
-    r = spark.createDataFrame(RATINGS, "user_id long, item_id long, rating double")
-    a = cf.user_cosine_similarities_pruned(r, min_overlap=2, materialize_norms=True)
-    b = cf.user_cosine_similarities_pruned(r, min_overlap=2, materialize_norms=False)
-    assert a.exceptAll(b).count() == 0
-    assert b.exceptAll(a).count() == 0
-    assert b.count() > 0
-
-
-def test_barrier_modes(spark, tmp_path, monkeypatch):
+def test_barrier_modes(spark, tmp_path):
     """session.barrier is the single materialization-barrier choke
-    point (VERDICT r12 item 5): every mode must return the same rows,
-    'reliable' must demand a checkpoint dir, unknown modes must raise."""
-    import pytest
-
+    point (VERDICT r12 item 5) and always pins its rows: with no
+    checkpoint dir it localCheckpoints (the plan scans an RDD); with
+    one it writes a reliable checkpoint under that dir."""
     from introduction_in_big_data_spark.session import barrier
 
+    sc = spark.sparkContext
+    prior = sc.getCheckpointDir()
     df = spark.range(8).selectExpr("id", "id * 3 AS v")
     rows = sorted(map(tuple, df.collect()))
+    ckpt = tmp_path / "ckpt"
+    try:
+        sc._jsc.sc().setCheckpointDir(None)
+        local = barrier(df)
+        assert sorted(map(tuple, local.collect())) == rows
+        assert "ExistingRDD" in _plan(local)
 
-    monkeypatch.setenv("SPARK_GRAFT_BARRIER", "none")
-    assert barrier(df) is df
-    monkeypatch.setenv("SPARK_GRAFT_BARRIER", "local")
-    assert sorted(map(tuple, barrier(df).collect())) == rows
-    monkeypatch.setenv("SPARK_GRAFT_BARRIER", "cache")
-    b = barrier(df, eager=True)
-    assert sorted(map(tuple, b.collect())) == rows
-    b.unpersist()
-    monkeypatch.setenv("SPARK_GRAFT_BARRIER", "reliable")
-    monkeypatch.delenv("SPARK_GRAFT_CHECKPOINT_DIR", raising=False)
-    if spark.sparkContext._jsc.sc().getCheckpointDir().isEmpty():
-        with pytest.raises(ValueError, match="checkpoint dir"):
-            barrier(df)
-    monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", str(tmp_path / "ckpt"))
-    assert sorted(map(tuple, barrier(df, eager=True).collect())) == rows
-    monkeypatch.setenv("SPARK_GRAFT_BARRIER", "bogus")
-    with pytest.raises(ValueError, match="bogus"):
-        barrier(df)
+        sc.setCheckpointDir(str(ckpt))
+        reliable = barrier(df, eager=True)
+        assert sorted(map(tuple, reliable.collect())) == rows
+        assert any(f.name.startswith("part-") for f in ckpt.rglob("*"))
+    finally:
+        sc._jsc.sc().setCheckpointDir(prior)
+    assert sc.getCheckpointDir() == prior
 
 
 def test_cf_exact_norms_no_checkpoint_scan(spark, tmp_path):

@@ -6,13 +6,13 @@ read 3.8-4.5x at sf0.1 purely on the local-mode fixed-cost floor
 ratio, the statistic the 100x question cares about).
 
 Stages an xN documents corpus under /tmp (N key-shifted copies of the
-sf0.1 table, same shape as tools/charlm_calib.py), then runs
+sf0.1 table), then runs
 calibration-bracketed paired rounds of the registered Spark query
 (noop sink) vs the registered DuckDB oracle on a FRESH connection.
 
 Usage: python tools/textq_calib.py <query> [N=10] [rounds=5]
-  query in {bpe_train_merges, tfidf_top_terms} (any registered
-  documents-only query works).
+  query in {bpe_train_merges, tfidf_top_terms, text_char_lm_quality}
+  (any registered documents-only query works).
 """
 
 from __future__ import annotations
