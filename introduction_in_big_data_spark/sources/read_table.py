@@ -30,6 +30,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .readers import read_parquet
+
 
 def detect_format(path: str) -> str:
     """The format marker present at `path` ('delta' | 'iceberg' |
@@ -81,7 +83,7 @@ def read_table(
         # them (create(stats=True)); exact either way
         return AcidTable(spark, path).read(predicates=predicates)
     if fmt == "parquet":
-        return _residual(spark.read.parquet(path), predicates)
+        return _residual(read_parquet(spark, path), predicates)
     if fmt == "csv":
         return _residual(
             spark.read.option("header", "true")

@@ -17,6 +17,8 @@ types across partitions.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
@@ -91,8 +93,77 @@ def read_jdbc(
     return reader.load()
 
 
+# The confs that change what parquet schema inference returns for the
+# same bytes; each is part of the memo key.
+_INFERENCE_CONFS = (
+    # NANOS timestamps: bigint when true, a [PARQUET_TYPE_ILLEGAL]
+    # error when false
+    "spark.sql.legacy.parquet.nanosAsLong",
+    # BINARY without a UTF8 annotation: string vs binary
+    "spark.sql.parquet.binaryAsString",
+    # INT96: timestamp vs binary
+    "spark.sql.parquet.int96AsTimestamp",
+    # TIMESTAMP(isAdjustedToUTC=false): timestamp_ntz vs timestamp
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    # one footer vs the union of every file's schema
+    "spark.sql.parquet.mergeSchema",
+    # whether field names differing only in case are one field
+    "spark.sql.caseSensitive",
+)
+# abspath -> (key, StructType), shared by every session in the process
+# (the key names the bytes and the confs): one entry per path, replaced
+# when the file or a conf changes, so it grows with the paths read only
+_SCHEMAS: dict[str, tuple[tuple, T.StructType]] = {}
+
+
+def file_identity(path: str) -> tuple:
+    """What identifies the bytes at `path` without reading them: its
+    absolute path, and (path, size, mtime_ns, inode) of the file or,
+    for a directory, of each file under it, sorted, skipping the names
+    Spark's file listing skips (a leading '.' or '_', unless a
+    partition 'k=v'). Rewriting a file changes its mtime or inode.
+    Raises OSError when `path` is not a local file or directory."""
+    root = os.path.abspath(path)
+    files = [root]
+    if os.path.isdir(root):
+        files = []
+        for d, subdirs, names in os.walk(root):
+            subdirs[:] = [n for n in subdirs if not _hidden(n)]
+            files += [os.path.join(d, n) for n in names if not _hidden(n)]
+        files.sort()
+    stats = [os.stat(f) for f in files]
+    return root, tuple(
+        (f, st.st_size, st.st_mtime_ns, st.st_ino) for f, st in zip(files, stats)
+    )
+
+
+def _hidden(name: str) -> bool:
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
+    """The engine's one parquet reader. `spark.read.parquet` infers the
+    schema on every call, with a Spark job that reads file footers;
+    here the inferred `StructType` is memoized, and a hit plans
+    `spark.read.schema(S).parquet(path)`: the same scan, and no job.
+
+    The memo key is `file_identity(path)` plus the session's values of
+    the confs in `_INFERENCE_CONFS`: each changes what inference
+    returns for the same bytes (see the comment on each), so flipping
+    one re-infers. A path with no local identity (a glob, a remote
+    URI) is read without the memo."""
+    try:
+        ident = file_identity(path)
+    except OSError:
+        return spark.read.parquet(path)
+    root = ident[0]
+    key = (ident, tuple(spark.conf.get(k) for k in _INFERENCE_CONFS))
+    held_key, schema = _SCHEMAS.get(root, (None, None))
+    if held_key == key:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[root] = (key, df.schema)
+    return df
 
 
 def read_binary_files(

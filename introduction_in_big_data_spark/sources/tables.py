@@ -7,7 +7,7 @@ table under /root/testdata/sf{0.001,0.01,0.1}/.
 
 Scale notes: parquet scans get column pruning + predicate pushdown from
 Catalyst for free as long as queries stay declarative; at cluster scale
-these would be multi-file datasets and the same `spark.read.parquet`
+these would be multi-file datasets and the same `read_parquet`
 call parallelizes by row-group/file split automatically.
 """
 
@@ -15,6 +15,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .readers import read_parquet
 
 TABLE_NAMES = [
     "region",
@@ -33,6 +35,11 @@ TABLE_NAMES = [
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
+    path = f"{sf_dir}/{name}.parquet"
+    # every table loads under one nanosAsLong value (events needs it,
+    # below): read_parquet's memo keys on it, so flipping it at the
+    # first events load would re-infer every table loaded before
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     if name == "events":
         # events.ts has shipped as both parquet TIMESTAMP(NANOS) and
         # TIMESTAMP(MICROS, isAdjustedToUTC=false) across driver
@@ -51,8 +58,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         #    zone makes the parse session-tz-independent, unlike a
         #    bare NTZ→LTZ cast or to_utc_timestamp, which both consult
         #    the session timezone.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        df = read_parquet(spark, path)
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":  # nanos-as-long file
             df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
@@ -61,7 +67,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 "ts", F.expr("cast(concat(cast(ts as string), 'Z') as timestamp)")
             )
         return df
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return read_parquet(spark, path)
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -22,6 +22,7 @@ exactly-once — none of which the reference's in-memory dicts survive.
 
 from __future__ import annotations
 
+import hashlib
 import os
 import uuid
 from collections.abc import Callable
@@ -30,8 +31,20 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..session import local_frame
+from ..sources.readers import file_identity, read_parquet
 
 STAGE_ROOT = "/tmp/ibd_spark_stream"
+
+
+def _stage_dir(sf_dir: str, suffix: str) -> str:
+    """The stage dir under STAGE_ROOT for `sf_dir`'s events file, keyed
+    on that file's identity (`readers.file_identity`): two data dirs
+    with the same basename, or a rewritten file, never share staged
+    files."""
+    ident = file_identity(os.path.join(sf_dir, "events.parquet"))
+    digest = hashlib.sha1(repr(ident).encode()).hexdigest()[:16]
+    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
+    return os.path.join(STAGE_ROOT, f"{tag}_{digest}_{suffix}")
 
 
 def stage_events_dir(spark: SparkSession, sf_dir: str, n_files: int = 5) -> str:
@@ -39,12 +52,11 @@ def stage_events_dir(spark: SparkSession, sf_dir: str, n_files: int = 5) -> str:
     /tmp (the read-only testdata dir holds one file per table; a file
     *stream* source needs a directory of files to treat as a queue).
     Deterministic content per file via range-partitioning on event_id;
-    idempotent per (sf_dir, n_files)."""
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
+    idempotent per (events file, n_files)."""
     # "v2": ts normalized to TIMESTAMP (LTZ) in sources/tables — the
     # version suffix keeps stale stage dirs written under an older
     # events schema from being reused across engine versions
-    out = os.path.join(STAGE_ROOT, f"{tag}_{n_files}_v2")
+    out = _stage_dir(sf_dir, f"{n_files}_v2")
     if not os.path.exists(os.path.join(out, "_SUCCESS")):
         from ..sources.tables import load_table
 
@@ -76,7 +88,7 @@ def events_stream(
     (watermark flush sentinels, incremental per-batch semantics) must
     keep a cap so files arrive across batches."""
     staged = stage_events_dir(spark, sf_dir, n_files)
-    schema = spark.read.parquet(staged).schema
+    schema = read_parquet(spark, staged).schema
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
@@ -111,8 +123,7 @@ def events_stream_with_flush(
 
     from ..sources.tables import load_table
 
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    out = os.path.join(STAGE_ROOT, f"{tag}_{n_files}_flush_v1")
+    out = _stage_dir(sf_dir, f"{n_files}_flush_v1")
     if not os.path.exists(os.path.join(out, "_SUCCESS")):
         events = load_table(spark, sf_dir, "events")
         (
@@ -154,7 +165,7 @@ def events_stream_with_flush(
         for p in sorted(glob.glob(os.path.join(out, "part-*.parquet"))):
             if p not in parts:
                 os.utime(p, (base + n_files, base + n_files))
-    schema = spark.read.parquet(out).schema
+    schema = read_parquet(spark, out).schema
     return (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)

@@ -3,9 +3,11 @@
 queries to plans/<tag>/<name>_<suffix>.txt — the optimization-round
 evidence files (guide §1: capture the plan shape before/after).
 
-Usage: python tools/explain_dump.py <tag> <suffix> [name ...]
+Usage: python tools/explain_dump.py [--out DIR] <tag> <suffix> [name ...]
   e.g. python tools/explain_dump.py r12 before
-Writes plans/<tag>/<name>_<suffix>.txt for each query.
+Writes plans/<tag>/<name>_<suffix>.txt for each query, or
+DIR/<name>_<suffix>.txt with --out DIR (a plan check that should not
+touch the repository's plans/).
 """
 
 from __future__ import annotations
@@ -22,11 +24,15 @@ from introduction_in_big_data_spark.session import get_spark  # noqa: E402
 
 
 def main() -> None:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "r12"
-    suffix = sys.argv[2] if len(sys.argv) > 2 else "before"
-    names = sys.argv[3:]
+    args = sys.argv[1:]
+    out = None
+    if args[:1] == ["--out"]:
+        out, args = Path(args[1]), args[2:]
+    tag = args[0] if len(args) > 0 else "r12"
+    suffix = args[1] if len(args) > 1 else "before"
+    names = args[2:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    out_dir = REPO / "plans" / tag
+    out_dir = out or REPO / "plans" / tag
     out_dir.mkdir(parents=True, exist_ok=True)
 
     spark = get_spark("ibd-explain-dump")
